@@ -26,6 +26,23 @@ _BASE_CONF = {
 }
 
 
+def _driver_mem() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM, else about 55% of the machine's memory
+    (MemTotal in /proc/meminfo): local[N] runs every executor inside the
+    driver JVM, and the rest is left to Python workers and the OS."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) * 55 // 100 // 1024}m"
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(app_name: str = "sum_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a local session tuned for this engine.
 
@@ -33,6 +50,7 @@ def get_spark(app_name: str = "sum_spark", cpus: int | None = None) -> SparkSess
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    mem = _driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -45,7 +63,8 @@ def get_spark(app_name: str = "sum_spark", cpus: int | None = None) -> SparkSess
         # dedup runs at 64g growable, flat ~2s at 20g fixed. -Xms==-Xmx
         # means pages commit lazily ONCE and never uncommit (AlwaysPreTouch
         # would also work but costs ~150s of upfront zeroing in this VM).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"))
+        # The size itself comes from the machine (_driver_mem).
+        .config("spark.driver.memory", mem)
         # Whole-stage codegen emits one class per stage; a long session
         # running dozens of queries fills the JVM's default ~240 MB code
         # cache, after which the JIT stops compiling and the interpreted
@@ -53,7 +72,7 @@ def get_spark(app_name: str = "sum_spark", cpus: int | None = None) -> SparkSess
         # query-server lifetime.
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '20g')} "
+            f"-Xms{mem} "
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
         .config("spark.ui.enabled", "false")

@@ -31,22 +31,36 @@ directory because the partition column is a grouping key (the filter
 pushes below the aggregate — the pq_index_rows plan shape). A
 ``_tombstones`` marker file, written by the first mutation and removed
 by ``compact``, lets a never-mutated table skip the netting aggregate
-entirely (ADVICE r6 #4). ``compact()`` folds the accumulated partials
-back into one file per bucket via the crash-safe bucket swap. The
-reference instead rewrites one protobuf file per record under a global
-lock (node/storage/saver.go:12-20) — per-record files at 100 TB are
-the small-files pathology; append-only partials + periodic compaction
-bound file count AND rewrite amplification. A transactional table
-format (Delta/Iceberg, gated by sources.formats.delta_available) would
-add MERGE/ACID on top of the same layout.
+entirely (ADVICE r6 #4).
+
+Writes bypass Spark. Like the reference, which persists a record by
+writing its file directly (node/storage/saver.go:12-20), a mutation's
+partials are written from the driver with pyarrow: one parquet file per
+touched bucket, under a hidden ``.part-*.tmp`` name that Spark's
+listing skips, then renamed into place. A point write thus pays no
+Spark job, no Python worker and no commit protocol, and each partial
+file appears whole or not at all. Reads, the netting aggregate,
+``delete_many`` and ``compact`` stay Spark jobs. ``compact()`` folds
+every bucket's partials in ONE Spark write into a hidden ``_compact-*``
+staging directory, then swaps each bucket in by rename; opening the store
+repairs whatever an interrupted fold or write left behind. Unlike the
+reference's one file per record, append-only partials plus periodic
+compaction bound file count AND rewrite amplification. The store
+assumes a local POSIX path (listing, rename, the marker file). A
+transactional table format (Delta/Iceberg, gated by
+sources.formats.delta_available) would add MERGE/ACID on top of the
+same layout.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -77,6 +91,21 @@ _WRITE_SCHEMA = StructType([*RECORD_SCHEMA.fields, StructField("w", IntegerType(
 # before the merge-on-read layout (or adopted flat files) lack ``w`` and
 # read as null -> coalesced to +1.
 _READ_SCHEMA = StructType([*_WRITE_SCHEMA.fields, StructField("b", IntegerType(), True)])
+
+# The Arrow form of _WRITE_SCHEMA, for partials written from the driver.
+_ARROW_WRITE_SCHEMA = pa.schema(
+    [
+        pa.field("id", pa.int64(), nullable=False),
+        pa.field("data", pa.list_(pa.float32())),
+        pa.field("shape", pa.list_(pa.int64())),
+        pa.field("meta", pa.map_(pa.string(), pa.string())),
+        pa.field("w", pa.int32()),
+    ]
+)
+
+# A bucket directory, and what an interrupted fold leaves beside one.
+_BUCKET_DIR = re.compile(r"b=-?\d+")
+_SWAP_LEFTOVER = re.compile(r"(b=-?\d+)\.(old|tmp)-\w+")
 
 NUM_BUCKETS = 16
 
@@ -117,6 +146,7 @@ class RecordStore:
             int(auto_compact_after) if auto_compact_after is not None else None
         )
         os.makedirs(path, exist_ok=True)
+        self._recover()
         self._adopt_flat_files()
         self._next_id = int(self._df_or_empty().agg(F.max("id")).first()[0] or 0) + 1
 
@@ -155,33 +185,58 @@ class RecordStore:
         except Exception:
             return self.spark.createDataFrame([], _READ_SCHEMA)
 
-    def _append_weighted(self, rows: list[tuple[Row, int]]) -> None:
-        """Append rows with PER-ROW weights in one write job, coalesced
-        to ONE task so all partials land in one file per partition dir —
-        the narrowest crash window update() can get (ADVICE r7: a 2-row
-        createDataFrame can otherwise split across tasks/files, and a
-        parquet append's job commit is not atomic across files, so the
-        w=-1 partial could land without its +1 replacement). With one
-        task the -1/+1 pair for an UNCHANGED id shares a file; a crash
-        mid-write leaves no visible file at all. Same-id-different-bucket
-        pairs still split by partitionBy — that residual window is
-        documented at update()."""
-        data = [
-            Row(id=r["id"], data=r["data"], shape=r["shape"], meta=r["meta"], w=int(w))
-            for r, w in rows
-        ]
-        df = self.spark.createDataFrame(data, _WRITE_SCHEMA).coalesce(1).withColumn(
-            "b", (F.col("id") % self.num_buckets).cast("int")
-        )
-        df.write.mode("append").partitionBy("b").parquet(self.path)
+    def _write(self, rows: list[tuple[dict, int]]) -> None:
+        """Persist ``(record, weight)`` rows from the driver: one parquet
+        file per touched bucket, written under a hidden name (Spark's
+        listing and ``_parquet_file_count`` skip dot-files) and renamed
+        into place, so each file appears whole or not at all. No Spark
+        job, no Python worker, no commit protocol: a point write costs
+        a file write, as in the reference (node/storage/saver.go:12-20).
+        Floats land as float32 exactly as Spark's FloatType cast would
+        store them, so a negation of a read row cancels bit-for-bit."""
+        by_bucket: dict[int, list[dict]] = {}
+        for rec, w in rows:
+            by_bucket.setdefault(self._bucket(rec["id"]), []).append({**rec, "w": int(w)})
+        for bucket, batch in by_bucket.items():
+            d = self._bucket_dir(bucket)
+            os.makedirs(d, exist_ok=True)
+            name = f"part-{uuid.uuid4().hex}.parquet"
+            tmp = os.path.join(d, f".{name}.tmp")
+            pq.write_table(pa.Table.from_pylist(batch, schema=_ARROW_WRITE_SCHEMA), tmp)
+            os.rename(tmp, os.path.join(d, name))
 
-    def _append(self, rows: list[Row], w: int = 1) -> None:
-        df = (
-            self.spark.createDataFrame(rows, RECORD_SCHEMA)
-            .withColumn("w", F.lit(int(w)))
-            .withColumn("b", (F.col("id") % self.num_buckets).cast("int"))
-        )
-        df.write.mode("append").partitionBy("b").parquet(self.path)
+    def _bucket_dirs(self) -> dict[int, str]:
+        """The bucket directories on disk, by bucket: exact ``b=<int>``
+        names only, never a fold's staging or swap leftovers."""
+        return {
+            int(entry[2:]): os.path.join(self.path, entry)
+            for entry in os.listdir(self.path)
+            if _BUCKET_DIR.fullmatch(entry)
+        }
+
+    def _recover(self) -> None:
+        """Repair what an interrupted write or fold left behind, once at
+        open: drop fold staging directories and hidden half-written
+        partials; a bucket renamed aside (``b=<k>.old-*``) goes back
+        when the crash came before its replacement landed and is dropped
+        otherwise; staged bucket rewrites (``b=<k>.tmp-*``) are dropped.
+        Each step restores the rows as they were before the crash. The
+        store is single-writer, so nothing found here is still in flight."""
+        for entry in sorted(os.listdir(self.path)):
+            p = os.path.join(self.path, entry)
+            leftover = _SWAP_LEFTOVER.fullmatch(entry)
+            if entry.startswith("_compact-"):
+                shutil.rmtree(p)
+            elif leftover:
+                target = os.path.join(self.path, leftover.group(1))
+                if leftover.group(2) == "old" and not os.path.exists(target):
+                    os.rename(p, target)
+                else:
+                    shutil.rmtree(p)
+            elif _BUCKET_DIR.fullmatch(entry):
+                for f in os.listdir(p):
+                    if f.startswith(".part-") and f.endswith(".tmp"):
+                        os.remove(os.path.join(p, f))
 
     # -- merge-on-read netting ------------------------------------------------
 
@@ -193,7 +248,7 @@ class RecordStore:
         with open(self._marker, "w") as fh:
             fh.write("1")
 
-    def _live(self) -> DataFrame:
+    def _live(self, by_bucket: bool = False) -> DataFrame:
         """The netted live view: sum(w) per full row content, positive
         sums survive. ``meta`` is a MapType (not groupable), so it rides
         the aggregate as its canonical sorted entry array and reassembles
@@ -201,8 +256,13 @@ class RecordStore:
         grouping key, so bucket/id predicates push below the aggregate to
         the scan (the pq_index_rows plan shape — plan-tested). A table
         with no tombstone marker skips the aggregate: creates append
-        unique live rows, so netting would be the identity."""
+        unique live rows, so netting would be the identity. ``by_bucket``
+        hash-partitions the scan by bucket first, which also satisfies
+        the aggregate's distribution: one shuffle serves both the netting
+        and a per-bucket write."""
         raw = self._df_or_empty()
+        if by_bucket:
+            raw = raw.repartition("b")
         if not os.path.isfile(self._marker):
             return raw.drop("w")
         keyed = raw.select(
@@ -227,31 +287,11 @@ class RecordStore:
             )
         )
 
-    def _rewrite_bucket(self, bucket: int, df: DataFrame) -> None:
-        """Swap ONE bucket directory for its new contents — the O(delta)
-        mutation: 1/num_buckets of the table is rewritten (and compacted
-        to a single file), every other bucket's files are untouched.
-        ``df`` must contain only rows of this bucket, without ``b``."""
-        target = self._bucket_dir(bucket)
-        tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = target + f".old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(target):
-            os.rename(target, old)
-        os.rename(tmp, target)
-        shutil.rmtree(old, ignore_errors=True)
-        # the staged write leaves a _SUCCESS marker; harmless, keep it
-
-    def _bucket_rows(self, bucket: int) -> DataFrame:
-        """One bucket's LIVE rows (directory-pruned, netted), partition
-        col dropped."""
-        return self._live().where(F.col("b") == bucket).drop("b")
-
     @staticmethod
-    def _normalize(data, shape, meta) -> tuple[list, list, dict]:
+    def _record(rid: int, data, shape=None, meta=None) -> dict:
         data = [float(x) for x in (data or [])]
         shape = [int(s) for s in shape] if shape else [len(data)]
-        return data, shape, dict(meta or {})
+        return {"id": int(rid), "data": data, "shape": shape, "meta": dict(meta or {})}
 
     # -- API ----------------------------------------------------------------
 
@@ -265,24 +305,23 @@ class RecordStore:
         """Assign the next sequential id and persist (records.go:26-31)."""
         rid = self._next_id
         self._next_id += 1
-        d, s, m = self._normalize(data, shape, meta)
-        self._append([Row(id=rid, data=d, shape=s, meta=m)])
+        self._write([(self._record(rid, data, shape, meta), 1)])
         self._maybe_auto_compact()
         return rid
 
     def create_with_id(self, rid: int, data, meta=None, shape=None) -> None:
         if self._exists(rid):
             raise IdCollision(f"record {rid} exists")
-        d, s, m = self._normalize(data, shape, meta)
-        self._append([Row(id=int(rid), data=d, shape=s, meta=m)])
+        self._write([(self._record(rid, data, shape, meta), 1)])
         self._next_id = max(self._next_id, int(rid) + 1)
         self._maybe_auto_compact()
 
     def create_many_with_id(self, records: dict[int, list]) -> None:
         """Bulk create; all-or-nothing like CreateRecordsWithId
         (node/storage/index.go:188-218): collisions are checked for the
-        whole batch before any write. One write job for the whole batch —
-        creates batch naturally instead of one file per record."""
+        whole batch before any write. One file per touched bucket for the
+        whole batch — creates batch naturally instead of one file per
+        record."""
         ids = [int(i) for i in records]
         hits = (
             self._live()
@@ -293,11 +332,7 @@ class RecordStore:
         )
         if hits:
             raise IdCollision(f"record {hits[0]['id']} exists")
-        rows = []
-        for rid, data in records.items():
-            d, s, m = self._normalize(data, None, None)
-            rows.append(Row(id=int(rid), data=d, shape=s, meta=m))
-        self._append(rows)
+        self._write([(self._record(rid, data), 1) for rid, data in records.items()])
         self._next_id = max(self._next_id, max(ids) + 1)
         self._maybe_auto_compact()
 
@@ -324,48 +359,27 @@ class RecordStore:
             raise RecordNotFound(rid)
         return rows[0]
 
-    @staticmethod
-    def _as_record_row(row: Row) -> Row:
-        """A live row re-materialized for a tombstone append. The values
-        round-trip exactly (float32 -> Python float -> float32 is
-        lossless for values that came FROM float32; longs and strings
-        trivially), so the w=-1 copy lands in the same netting group as
-        the stored +1 partial and cancels it."""
-        return Row(
-            id=int(row["id"]),
-            data=list(row["data"]) if row["data"] is not None else None,
-            shape=list(row["shape"]) if row["shape"] is not None else None,
-            meta=dict(row["meta"]) if row["meta"] is not None else None,
-        )
-
     def update(self, rid: int, data=None, meta=None, shape=None) -> None:
         """Overwrite data/meta/shape by id (record_driver.go:32-45).
         O(delta) APPEND: the old version goes back in with w=-1 (netting
         cancels it), the new version with w=+1 — no bucket rewrite, no
         other row touched."""
         old = self.read(rid)
-        d, s, m = self._normalize(
+        new = self._record(
+            rid,
             data if data is not None else old["data"],
             shape if shape is not None else old["shape"],
             meta if meta is not None else old["meta"],
         )
         # marker FIRST (a crash after the -1 row but before the marker
         # would let the pass-through path serve the tombstone as live),
-        # then BOTH partials in ONE single-task write job: a crash
-        # between two separate appends would negate the old version with
-        # no replacement — a silent delete where the caller asked for an
-        # update. One coalesced task NARROWS that window (same bucket =
-        # same file = one visible-or-not unit) but does not close it:
-        # update() keys by id, so both versions share a bucket and the
-        # window is gone in practice; if the id ever re-bucketed, the
-        # pair would span two files whose commits are not atomic.
+        # then BOTH partials in ONE file: a crash between two separate
+        # appends would negate the old version with no replacement — a
+        # silent delete where the caller asked for an update. Both
+        # versions share the id, hence the bucket, hence the file, which
+        # appears in a single rename: the pair lands whole or not at all.
         self._mark_tombstones()
-        self._append_weighted(
-            [
-                (self._as_record_row(old), -1),
-                (Row(id=int(rid), data=d, shape=s, meta=m), 1),
-            ]
-        )
+        self._write([(old.asDict(), -1), (new, 1)])
         self._maybe_auto_compact()
 
     def delete(self, rid: int) -> None:
@@ -374,7 +388,7 @@ class RecordStore:
         and fetches the exact live version to negate)."""
         old = self.read(rid)
         self._mark_tombstones()  # marker first — see update()
-        self._append([self._as_record_row(old)], w=-1)
+        self._write([(old.asDict(), -1)])
         self._maybe_auto_compact()
 
     def delete_many(self, rids: list[int]) -> None:
@@ -398,13 +412,12 @@ class RecordStore:
         self._maybe_auto_compact()
 
     def _parquet_file_count(self) -> int:
-        n = 0
-        for entry in os.listdir(self.path):
-            if not entry.startswith("b="):
-                continue
-            d = os.path.join(self.path, entry)
-            n += sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-        return n
+        return sum(
+            1
+            for d in self._bucket_dirs().values()
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        )
 
     def _maybe_auto_compact(self) -> None:
         """Fire :meth:`compact` when accumulated partial files exceed
@@ -417,18 +430,31 @@ class RecordStore:
             self.compact()
 
     def compact(self) -> None:
-        """Fold each bucket's accumulated partials (create-appends and
-        tombstones) into one netted file per bucket — the offline
-        maintenance job that bounds file count and removes the per-read
-        netting work (the tombstone marker comes off afterwards, so reads
-        return to the pass-through path). Crash-safe per bucket via the
-        staged tmp/rename swap."""
-        for entry in sorted(os.listdir(self.path)):
-            if entry.startswith("b="):
-                bucket = int(entry.split("=", 1)[1])
-                self._rewrite_bucket(bucket, self._bucket_rows(bucket))
+        """Fold every bucket's accumulated partials (create-appends and
+        tombstones) into one netted file per bucket — the maintenance
+        job that bounds file count and removes the per-read netting work
+        (the tombstone marker comes off afterwards, so reads return to
+        the pass-through path). ONE Spark write, with a single shuffle
+        by bucket whatever the bucket count, puts the live view into a
+        hidden staging directory; each bucket is then swapped in by
+        rename. A bucket with no live row
+        left is swapped for an empty directory: were its old partials
+        kept, clearing the marker would serve its deleted rows again.
+        A crash at any point leaves a state that reads the same rows and
+        that ``_recover`` repairs at the next open."""
+        buckets = self._bucket_dirs()
+        staging = os.path.join(self.path, f"_compact-{uuid.uuid4().hex}")
+        self._live(by_bucket=True).write.partitionBy("b").parquet(staging)
+        for bucket, target in sorted(buckets.items()):
+            folded = os.path.join(staging, f"b={bucket}")
+            os.makedirs(folded, exist_ok=True)
+            old = f"{target}.old-{uuid.uuid4().hex[:8]}"
+            os.rename(target, old)
+            os.rename(folded, target)
+            shutil.rmtree(old)
         if os.path.isfile(self._marker):
             os.remove(self._marker)
+        shutil.rmtree(staging)
 
     def list(self, page: int = 1, per_page: int = 10) -> tuple[int, list[Row]]:
         """Ordered pagination returning (total, rows)

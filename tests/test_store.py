@@ -380,3 +380,229 @@ def test_keyset_pagination_equals_offset_walk(spark, tmp_path):
         .toString()
     )
     assert "PushedFilters" in plan and "GreaterThan(id,7)" in plan
+
+
+def _rows(store) -> dict:
+    """Live rows as {id: (data, shape, meta)}; NaN-safe for equality."""
+    import math
+
+    def f(x):
+        return "nan" if isinstance(x, float) and math.isnan(x) else x
+
+    return {
+        r["id"]: (
+            None if r["data"] is None else tuple(f(x) for x in r["data"]),
+            None if r["shape"] is None else tuple(r["shape"]),
+            None if r["meta"] is None else tuple(sorted(r["meta"].items())),
+        )
+        for r in store.df.collect()
+    }
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_on(monkeypatch, module, name, nth):
+    """Make ``module.name`` raise on its ``nth`` call (1-based), as if the
+    process died right there; earlier calls go through."""
+    real = getattr(module, name)
+    calls = []
+
+    def wrapper(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == nth:
+            raise _Crash(name)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, wrapper)
+
+
+def _netted_store(spark, path):
+    """A 2-bucket store holding partials and tombstones in both buckets."""
+    store = RecordStore(spark, path, num_buckets=2)
+    for i in range(6):
+        store.create([float(i), 0.5], meta={"k": str(i % 3)})
+    store.update(2, data=[7.0])
+    store.delete(3)
+    store.delete(4)
+    return store
+
+
+@pytest.mark.parametrize(
+    "crash",
+    [
+        ("shutil", "rmtree", 1),  # fold staged, old bucket 0 not yet removed
+        ("os", "rename", 1),  # fold staged, nothing swapped
+        ("os", "rename", 2),  # bucket 0 moved aside, its fold not yet in
+        ("os", "rename", 4),  # bucket 1 moved aside after bucket 0 swapped
+        ("os", "remove", 1),  # every bucket swapped, marker still set
+    ],
+)
+def test_reopen_recovers_interrupted_compact(spark, tmp_path, monkeypatch, crash):
+    """A crash at any point of the fold leaves a store that, reopened,
+    serves exactly the rows it held before the fold, carries no staging
+    or swap leftovers, and folds cleanly afterwards."""
+    import glob
+    import os
+    import shutil
+
+    path = str(tmp_path / "records")
+    store = _netted_store(spark, path)
+    before = _rows(store)
+    mod = {"os": os, "shutil": shutil}[crash[0]]
+    _crash_on(monkeypatch, mod, crash[1], crash[2])
+    with pytest.raises(_Crash):
+        store.compact()
+    monkeypatch.undo()
+
+    reopened = RecordStore(spark, path, num_buckets=2)
+    assert sorted(os.listdir(path)) == ["_tombstones", "b=0", "b=1"]
+    assert _rows(reopened) == before
+    assert reopened.read(2)["data"] == [7.0]
+    with pytest.raises(RecordNotFound):
+        reopened.read(3)
+    reopened.compact()
+    assert _rows(reopened) == before
+    assert len(glob.glob(f"{path}/b=*/part-*.parquet")) == 2
+
+
+def test_reopen_drops_half_written_partial(spark, tmp_path, monkeypatch):
+    """A crash between the partial's write and its rename leaves a hidden
+    file that no read sees; the reopen removes it and the update it
+    belonged to simply did not happen."""
+    import os
+
+    path = str(tmp_path / "records")
+    store = _netted_store(spark, path)
+    before = _rows(store)
+    _crash_on(monkeypatch, os, "rename", 1)
+    with pytest.raises(_Crash):
+        store.update(1, data=[9.0])
+    monkeypatch.undo()
+    bucket = os.path.join(path, "b=1")
+    assert any(f.startswith(".part-") for f in os.listdir(bucket))
+    assert _rows(store) == before  # invisible even before the reopen
+
+    reopened = RecordStore(spark, path, num_buckets=2)
+    assert not any(f.startswith(".part-") for f in os.listdir(bucket))
+    assert _rows(reopened) == before
+
+
+def test_reopen_drops_staged_bucket_rewrite(spark, tmp_path):
+    """A ``b=<k>.tmp-*`` directory (a bucket rewrite staged by an older
+    fold that crashed) must not hide the store's rows: reopen drops it,
+    and count, read and compact work on the rows as they were."""
+    import os
+    import shutil
+
+    path = str(tmp_path / "records")
+    store = RecordStore(spark, path, num_buckets=2)
+    for i in range(4):
+        store.create([float(i)])
+    before = _rows(store)
+    shutil.copytree(os.path.join(path, "b=0"), os.path.join(path, "b=0.tmp-deadbeef"))
+
+    reopened = RecordStore(spark, path, num_buckets=2)
+    assert not os.path.exists(os.path.join(path, "b=0.tmp-deadbeef"))
+    assert reopened.count() == 4
+    assert reopened.read(2)["data"] == [1.0]
+    reopened.compact()
+    assert _rows(reopened) == before
+    assert reopened._parquet_file_count() == 2
+
+
+def test_compact_empties_a_bucket(spark, tmp_path):
+    """Deleting every row of one bucket, then folding: the emptied bucket
+    is swapped for an empty directory, so clearing the netting marker
+    cannot bring its deleted rows back."""
+    import os
+
+    path = str(tmp_path / "records")
+    store = RecordStore(spark, path, num_buckets=2)
+    for i in range(1, 7):
+        store.create([float(i)], meta={"parity": str(i % 2)})
+    store.delete(2)
+    store.delete_many([4, 6])
+    store.compact()
+    assert not os.path.isfile(store._marker)
+    assert os.listdir(os.path.join(path, "b=0")) == []
+    for s in (store, RecordStore(spark, path, num_buckets=2)):
+        assert s.count() == 3
+        assert sorted(s.df.toPandas()["id"]) == [1, 3, 5]
+        for rid in (2, 4, 6):
+            with pytest.raises(RecordNotFound):
+                s.read(rid)
+        assert s.read(3)["data"] == [3.0]
+        assert s.find_by_meta("parity", "0") == []
+        assert [r["id"] for r in s.find_by_meta("parity", "1")] == [1, 3, 5]
+    # the store keeps working in the emptied bucket
+    store.create_with_id(8, [8.0])
+    assert store.read(8)["data"] == [8.0]
+    assert store.count() == 4
+
+
+def test_writer_parity_floats_and_nulls(spark, tmp_path):
+    """Rows from the driver-side writer, from adoption of a flat file and
+    from a fold net against each other exactly: awkward floats store as
+    Spark's FloatType cast would, null meta/shape round-trip, and update
+    and delete cancel adopted, written and folded rows alike."""
+    import math
+    import struct
+
+    from pyspark.sql import functions as F
+
+    floats = [0.1, 1 / 3, 1e39, float("nan"), -0.0, 1e-40]
+    cast = (
+        spark.createDataFrame([(floats,)], "x array<double>")
+        .select(F.col("x").cast("array<float>").alias("x"))
+        .first()["x"]
+    )
+    assert math.isinf(cast[2]) and cast[5] != 0.0  # overflow and subnormal
+
+    def bits(xs):
+        return [
+            "nan" if math.isnan(x) else struct.pack("<f", x).hex() for x in xs
+        ]
+
+    # adopted rows: a plain Spark parquet write of the FloatType cast,
+    # two of them with null meta / null shape
+    path = str(tmp_path / "records")
+    spark.createDataFrame(
+        [
+            (1, floats, [6], {"src": "flat"}),
+            (2, [1.0], None, {"src": "flat"}),
+            (3, [2.0], [1], None),
+        ],
+        "id bigint, data array<double>, shape array<bigint>, meta map<string,string>",
+    ).withColumn("data", F.col("data").cast("array<float>")).coalesce(1).write.parquet(path)
+    store = RecordStore(spark, path, num_buckets=2)
+    store.create_with_id(4, floats)
+    for rid in (1, 4):  # pass-through reads: stored bits, no netting
+        assert bits(store.read(rid)["data"]) == bits(cast)
+    assert store.read(2)["shape"] is None and store.read(3)["meta"] is None
+
+    # negations of adopted rows (awkward floats, null shape, null meta)
+    store.update(1, meta={"src": "updated"})
+    store.delete(2)
+    store.update(3, data=[3.0])
+    store.delete(4)
+    assert _rows(store) == {
+        1: (tuple("nan" if math.isnan(x) else x for x in cast), (6,), (("src", "updated"),)),
+        3: ((3.0,), (1,), ()),  # an update writes meta {} for null
+    }
+
+    # negations of folded rows
+    store.create_with_id(5, floats, meta={"src": "new"})
+    store.compact()
+    before = _rows(store)
+    store.update(5, meta={"src": "again"})
+    store.delete(3)
+    store.update(1, data=floats)
+    after = _rows(store)
+    assert set(after) == {1, 5}
+    assert after[1] == before[1] and after[5][0] == before[5][0]
+    assert after[5][2] == (("src", "again"),)
+    store.delete(1)
+    store.delete(5)
+    assert store.count() == 0
