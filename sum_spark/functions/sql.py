@@ -4,7 +4,7 @@ Column API (SURVEY §4 item 4 — no Catalyst extension required).
 
 Two tiers, mirroring the dual backend:
 
-- ``register_sql_functions``: NumPy pandas UDFs (`vec_dot`, `vec_cosine`,
+- ``register_sql_functions``: NumPy Arrow UDFs (`vec_dot`, `vec_cosine`,
   `vec_magnitude`) — one registration, callable from any SQL text, Arrow
   batched. This is the pragmatic SQL path.
 - the pure-Catalyst expressions remain available through the DataFrame

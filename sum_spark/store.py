@@ -26,21 +26,28 @@ point read exactly, so the negation cancels in the netting group);
 Mutations are therefore O(rows touched) APPENDS — no bucket rewrite,
 no read-modify-write race window, and a changed row nets to exactly
 its new version. The live view (``_live``) nets w per full row content
-and keeps positive sums; point reads still prune to the id's bucket
-directory because the partition column is a grouping key (the filter
-pushes below the aggregate — the pq_index_rows plan shape). A
-``_tombstones`` marker file, written by the first mutation and removed
+and keeps positive sums; a bucket/id filter on it still prunes to the
+id's bucket directory because the partition column is a grouping key
+(the filter pushes below the aggregate — the pq_index_rows plan shape).
+A ``_tombstones`` marker file, written by the first mutation and removed
 by ``compact``, lets a never-mutated table skip the netting aggregate
 entirely (ADVICE r6 #4).
 
-Writes bypass Spark. Like the reference, which persists a record by
-writing its file directly (node/storage/saver.go:12-20), a mutation's
-partials are written from the driver with pyarrow: one parquet file per
-touched bucket, under a hidden ``.part-*.tmp`` name that Spark's
-listing skips, then renamed into place. A point write thus pays no
-Spark job, no Python worker and no commit protocol, and each partial
-file appears whole or not at all. Reads, the netting aggregate,
-``delete_many`` and ``compact`` stay Spark jobs. ``compact()`` folds
+Point operations bypass Spark. Like the reference, which persists a
+record by writing its file directly (node/storage/saver.go:12-20), a
+mutation's partials are written from the driver with pyarrow: one
+parquet file per touched bucket, under a hidden ``.part-*.tmp`` name
+that Spark's listing skips, then renamed into place, so each partial
+file appears whole or not at all. Point lookups — ``read``, the read
+before ``update``/``delete``, and the collision checks of the
+create-with-id calls — read the id's bucket files from the driver too
+(``_lookup``: id filter pushed into the pyarrow scan, then the same
+netting rule as ``_live``, with Spark's grouping equality for floats),
+as the reference serves Read from memory (node/storage/index.go). A
+point operation thus pays no Spark job, no Python worker, no query
+planning and no commit protocol. Scans — ``df``, ``list``,
+``find_by_meta``, ``count`` — and ``delete_many``, ``compact`` and
+adoption stay Spark jobs on the ``_live`` view. ``compact()`` folds
 every bucket's partials in ONE Spark write into a hidden ``_compact-*``
 staging directory, then swaps each bucket in by rename; opening the store
 repairs whatever an interrupted fold or write left behind. Unlike the
@@ -60,6 +67,7 @@ import shutil
 import uuid
 
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -310,7 +318,7 @@ class RecordStore:
         return rid
 
     def create_with_id(self, rid: int, data, meta=None, shape=None) -> None:
-        if self._exists(rid):
+        if self._lookup([rid]):
             raise IdCollision(f"record {rid} exists")
         self._write([(self._record(rid, data, shape, meta), 1)])
         self._next_id = max(self._next_id, int(rid) + 1)
@@ -323,47 +331,76 @@ class RecordStore:
         whole batch — creates batch naturally instead of one file per
         record."""
         ids = [int(i) for i in records]
-        hits = (
-            self._live()
-            .where(F.col("id").isin(ids))
-            .select("id")
-            .limit(1)
-            .collect()
-        )
+        hits = self._lookup(ids)
         if hits:
-            raise IdCollision(f"record {hits[0]['id']} exists")
+            raise IdCollision(f"record {min(hits)} exists")
         self._write([(self._record(rid, data), 1) for rid, data in records.items()])
         self._next_id = max(self._next_id, max(ids) + 1)
         self._maybe_auto_compact()
 
-    def _exists(self, rid: int) -> bool:
-        return (
-            self._live()
-            .where((F.col("b") == self._bucket(rid)) & (F.col("id") == rid))
-            .limit(1)
-            .count()
-            > 0
+    def _lookup(self, ids) -> dict[int, Row]:
+        """Live rows by id, read from the driver with pyarrow: no Spark
+        job, no Python worker, no query planning — a point lookup costs
+        a filtered read of the touched buckets' files, as the reference
+        serves Read from its in-memory index (node/storage/index.go).
+        Files are listed by Spark's rules (names starting with ``.`` or
+        ``_`` are hidden), the id filter is pushed into the parquet scan,
+        and files with no ``w`` (adopted) read as +1. Rows then net as
+        ``_live`` nets them — sum(w) per full row content, positive sums
+        survive — under Spark's grouping equality: -0.0 groups with 0.0
+        and every NaN with every NaN. Returns ``{id: Row(id, data, shape,
+        meta)}`` with the stored bits; null shape/meta stay null."""
+        ids = sorted({int(i) for i in ids})
+        files = [
+            os.path.join(d, f)
+            for d in (self._bucket_dir(b) for b in sorted({self._bucket(i) for i in ids}))
+            if os.path.isdir(d)
+            for f in sorted(os.listdir(d))
+            if not f.startswith((".", "_"))
+        ]
+        if not files:
+            return {}
+        table = ds.dataset(files, schema=_ARROW_WRITE_SCHEMA, format="parquet").to_table(
+            filter=ds.field("id").isin(ids)
         )
+        net: dict[tuple, list] = {}
+        for rec in table.to_pylist():
+            data, shape, meta = rec["data"], rec["shape"], rec["meta"]
+            key = (
+                rec["id"],
+                None if data is None else tuple("NaN" if x != x else x for x in data),
+                None if shape is None else tuple(shape),
+                None if meta is None else tuple(sorted(meta)),
+            )
+            entry = net.setdefault(key, [rec, 0])
+            entry[1] += 1 if rec["w"] is None else rec["w"]
+        out: dict[int, Row] = {}
+        for (rid, _, _, meta), (rec, w) in net.items():
+            if w > 0 and rid not in out:
+                out[rid] = Row(
+                    id=rid,
+                    data=rec["data"],
+                    shape=rec["shape"],
+                    meta=None if meta is None else dict(meta),
+                )
+        return out
 
     def read(self, rid: int) -> Row:
-        """Point lookup against the live view, pruned to the id's bucket
-        directory (bucket and id are grouping keys of the netting
-        aggregate, so the filter reaches the scan)."""
-        rows = (
-            self._live()
-            .where((F.col("b") == self._bucket(rid)) & (F.col("id") == rid))
-            .drop("b")
-            .collect()
-        )
-        if not rows:
+        """Point lookup of the live row, from the driver with no Spark
+        job (see :meth:`_lookup`): reads only the id's bucket directory
+        and nets it as ``_live`` does, with Spark's grouping equality
+        (-0.0 equals 0.0, NaN equals NaN)."""
+        row = self._lookup([rid]).get(int(rid))
+        if row is None:
             raise RecordNotFound(rid)
-        return rows[0]
+        return row
 
     def update(self, rid: int, data=None, meta=None, shape=None) -> None:
         """Overwrite data/meta/shape by id (record_driver.go:32-45).
-        O(delta) APPEND: the old version goes back in with w=-1 (netting
+        O(delta) APPEND: the old version, fetched by the driver-side
+        lookup with its stored bits, goes back in with w=-1 (netting
         cancels it), the new version with w=+1 — no bucket rewrite, no
-        other row touched."""
+        other row touched, no Spark job."""
         old = self.read(rid)
         new = self._record(
             rid,

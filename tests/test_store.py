@@ -606,3 +606,156 @@ def test_writer_parity_floats_and_nulls(spark, tmp_path):
     store.delete(1)
     store.delete(5)
     assert store.count() == 0
+
+
+def _canon(row):
+    """A row as a comparable tuple: NaN-safe, meta order-free."""
+    if row is None:
+        return None
+    return (
+        row["id"],
+        None if row["data"] is None else tuple("nan" if x != x else x for x in row["data"]),
+        None if row["shape"] is None else tuple(row["shape"]),
+        None if row["meta"] is None else tuple(sorted(row["meta"].items())),
+    )
+
+
+@pytest.mark.parametrize("seed", [5, 31])
+def test_driver_lookup_matches_live_view(spark, tmp_path, seed):
+    """The driver-side point lookup serves exactly what the Spark live
+    view holds: after every step of a random create / create_with_id /
+    update / delete / delete_many / compact / reopen sequence, read(id)
+    equals the id's row in ``_live()`` — or both are absent — for every
+    id ever used, on awkward floats and on adopted rows with null meta
+    and null shape."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    floats = [0.1, 1 / 3, 1e39, float("nan"), -0.0, 1e-40]
+    path = str(tmp_path / "records")
+    spark.createDataFrame(
+        [
+            (1, floats, [6], {"src": "flat"}),
+            (2, [1.0, -0.0], None, {"src": "flat"}),
+            (3, [float("nan")], [1], None),
+            (4, [], None, None),
+        ],
+        "id bigint, data array<double>, shape array<bigint>, meta map<string,string>",
+    ).withColumn("data", F.col("data").cast("array<float>")).coalesce(1).write.parquet(path)
+    rng = np.random.default_rng(seed)
+    store = RecordStore(spark, path, num_buckets=4)
+    live, used = {1, 2, 3, 4}, {1, 2, 3, 4}
+
+    def data():
+        return [floats[i] for i in rng.integers(0, len(floats), int(rng.integers(0, 4)))]
+
+    def check():
+        ids = sorted(used)
+        rows: dict = {}
+        for r in (
+            store._live()
+            .where(
+                F.col("b").isin(sorted({store._bucket(i) for i in ids}))
+                & F.col("id").isin(ids)
+            )
+            .drop("b")
+            .collect()
+        ):
+            assert r["id"] not in rows  # one live version per id
+            rows[r["id"]] = r
+        assert set(rows) == live
+        for rid in ids:
+            try:
+                got = store.read(rid)
+            except RecordNotFound:
+                got = None
+            assert _canon(got) == _canon(rows.get(rid)), rid
+
+    def pick(pool):
+        return int(rng.choice(sorted(pool)))
+
+    check()
+    for step in range(20):
+        op = rng.choice(
+            ["create", "create_id", "update", "delete", "delete_many", "compact", "reopen"],
+            p=[0.2, 0.15, 0.25, 0.12, 0.08, 0.1, 0.1],
+        )
+        if op == "create":
+            rid = store.create(data(), meta={"s": str(step)})
+            live.add(rid)
+            used.add(rid)
+        elif op == "create_id":
+            rid = pick(used | {100, 101, 102})
+            used.add(rid)
+            if rid in live:
+                with pytest.raises(IdCollision):
+                    store.create_with_id(rid, data())
+            else:
+                store.create_with_id(rid, data(), meta={"c": str(step)})
+                live.add(rid)
+        elif op == "update":
+            rid = pick(live if live and rng.random() < 0.8 else used)
+            if rid in live:
+                store.update(rid, data=data() if rng.random() < 0.5 else None)
+            else:
+                with pytest.raises(RecordNotFound):
+                    store.update(rid, data=[1.0])
+        elif op == "delete":
+            rid = pick(live if live and rng.random() < 0.8 else used)
+            if rid in live:
+                store.delete(rid)
+                live.discard(rid)
+            else:
+                with pytest.raises(RecordNotFound):
+                    store.delete(rid)
+        elif op == "delete_many":
+            ids = [int(i) for i in rng.choice(sorted(used), 2)]
+            store.delete_many(ids)
+            live.difference_update(ids)
+        elif op == "compact":
+            store.compact()
+        else:
+            store = RecordStore(spark, path, num_buckets=4)
+        check()
+
+
+def test_point_ops_start_no_spark_job(spark, tmp_path):
+    """read, update, delete and the create-with-id collision checks run
+    from the driver even on a netted store (tombstone marker set): they
+    start no Spark job. compact still runs on Spark."""
+    import os
+
+    store = RecordStore(spark, str(tmp_path / "records"), num_buckets=2)
+    for i in range(5):
+        store.create([float(i)], meta={"k": str(i)})
+    store.delete(5)
+    assert os.path.isfile(store._marker)
+    sc = spark.sparkContext
+
+    def jobs(tag, fn):
+        sc.setJobGroup(tag, tag)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    def point_ops():
+        assert store.read(1)["data"] == [0.0]
+        store.update(2, data=[9.0])
+        store.delete(3)
+        with pytest.raises(RecordNotFound):
+            store.read(3)
+        store.create_with_id(3, [3.0])
+        with pytest.raises(IdCollision):
+            store.create_with_id(1, [1.0])
+        with pytest.raises(IdCollision):
+            store.create_many_with_id({7: [7.0], 4: [4.0]})
+        store.create_many_with_id({7: [7.0], 8: [8.0]})
+
+    assert jobs("store-point-ops", point_ops) == 0
+    assert jobs("store-compact", store.compact) >= 1
+    assert {r["id"]: r["data"] for r in store.df.collect()} == {
+        1: [0.0], 2: [9.0], 3: [3.0], 4: [3.0], 7: [7.0], 8: [8.0]
+    }

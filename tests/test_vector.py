@@ -129,6 +129,36 @@ def test_backend_select_dispatch(vec_df):
         VP.select_backend("blas99")
 
 
+@pytest.mark.parametrize("batch", [1000, 1])
+def test_numpy_backend_ragged_batches(spark, vec_df, batch):
+    """The NumPy kernels agree with the Catalyst path whatever the Arrow
+    batch composition: one partition, so at 1000 rows per batch every
+    vector length shares one batch, and at 1 each row is its own."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(batch))
+    try:
+        rows = (
+            vec_df.coalesce(1)
+            .select(
+                V.dot("a", "b").alias("d1"),
+                VP.dot_np("a", "b").alias("d2"),
+                V.cosine("a", "b").alias("c1"),
+                VP.cosine_np("a", "b").alias("c2"),
+                V.magnitude("a").alias("m1"),
+                VP.magnitude_np("a").alias("m2"),
+            )
+            .collect()
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert len(rows) == 6
+    for r in rows:
+        assert r["d2"] == pytest.approx(r["d1"], abs=1e-9)
+        assert r["c2"] == pytest.approx(r["c1"], abs=1e-9)
+        assert r["m2"] == pytest.approx(r["m1"], abs=1e-9)
+
+
 def test_magnitude_matches_math(vec_df):
     got = _one(vec_df, V.magnitude("a"), row=4)
     assert got == pytest.approx(math.sqrt(3.0))
