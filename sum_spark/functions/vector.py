@@ -5,8 +5,12 @@ expressions.
 Design notes (Spark-first, not a port):
 
 - Everything here is a *pure column expression* built from
-  ``zip_with``/``aggregate``/``slice`` — it stays inside whole-stage
-  codegen, parallelizes per-partition, and needs no Python round-trip.
+  ``zip_with``/``aggregate``/``slice``: it parallelizes per-partition and
+  needs no Python round-trip. The higher-order functions are
+  ``CodegenFallback`` in Spark 4.1, so each one is interpreted per
+  element outside whole-stage codegen; callers that need a kernel more
+  than once per row should alias it in one projection and reference the
+  alias (``operators/similarity.py`` stages dot and norm that way).
   Contrast: the reference serializes every dot product behind one global
   mutex (node/backend/backend.go:8,67-71); Spark's per-partition execution
   removes that bottleneck by construction.
@@ -95,8 +99,17 @@ def dot_sub(a: Column | str, b: Column | str, elems: int) -> Column:
 
 
 def magnitude(a: Column | str) -> Column:
-    """L2 norm = sqrt(dot(self, self)). Reference: node/wrapper/record.go:91-94."""
-    return F.sqrt(dot(a, a))
+    """L2 norm = sqrt(dot(self, self)). Reference: node/wrapper/record.go:91-94.
+
+    One fold over the array, the squares summed in the same order as
+    ``dot(a, a)`` (so the same bits, NULL for a null array or element),
+    without ``dot``'s intermediate ``zip_with`` array.
+    """
+    return F.sqrt(
+        F.aggregate(
+            _col(a), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
+        )
+    )
 
 
 def _cosine_expr(a: Column, b: Column) -> Column:

@@ -13,11 +13,39 @@ driver merge is the merger.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sum_spark.functions.vector import cosine, vec_get
+from sum_spark.functions.vector import cosine, dot, magnitude, vec_get
+
+
+def _probe_side(vec: Column) -> list[Column]:
+    """The broadcast side's kernel inputs: the probe vector and its norm,
+    computed once per probe rather than once per (record, probe) pair."""
+    return [vec.alias("__pv"), magnitude(vec).alias("__pmag")]
+
+
+def _cosine_to_probe(
+    pairs: DataFrame, keep: list[Column], vec_col: str, round_to: int | None
+) -> DataFrame:
+    """``keep`` plus ``sim``: the cosine of ``vec_col`` against the
+    ``_probe_side`` columns of each row, bit-identical to
+    ``functions.vector.cosine``. Dot and norm are aliased in one
+    projection and ``sim`` is formed from them in a second; CollapseProject
+    leaves the two apart (merging them would duplicate the kernels), so
+    each row evaluates its ``zip_with``/``aggregate`` kernels once."""
+    staged = pairs.select(
+        *keep,
+        dot(F.col(vec_col), F.col("__pv")).alias("__dot"),
+        magnitude(vec_col).alias("__mag"),
+        "__pmag",
+    )
+    den = F.col("__mag") * F.col("__pmag")
+    sim = F.when(den == 0.0, F.lit(0.0)).otherwise(F.col("__dot") / den)
+    if round_to is not None:
+        sim = F.round(sim, round_to)
+    return staged.select(*keep, sim.alias("sim"))
 
 
 def find_similar(
@@ -40,28 +68,35 @@ def find_similar(
     of one point-lookup action; the default stays lazy and yields an
     empty result.
 
-    Scale: the probe is one broadcast row, the scan is embarrassingly
-    parallel, and ``k`` compiles to TakeOrderedAndProject (per-partition
-    heap, no global sort) — this survives a 100x scale-up where the
-    reference's lock-serialized full scan does not.
+    Scale: the probe and its norm are one broadcast row, the scan is
+    embarrassingly parallel, and each record's dot and norm are
+    evaluated once (``_cosine_to_probe``). With ``k`` the threshold is
+    applied after the top-k (TakeOrderedAndProject: per-partition heap,
+    no global sort), so it never re-inlines the kernel into the join
+    condition. That is exact: in the (sim desc, id) order NaN sorts
+    first and passes ``>=``, NULL sorts last and fails, and ties pass or
+    fail together, so the rows that pass are a prefix of the order and
+    the first k of them are the passing rows among its first k. Without
+    ``k`` the filter is pushed into the join and evaluates the dot a
+    second time. This survives a 100x scale-up where the reference's
+    lock-serialized full scan does not.
     """
-    probe = (
-        records.where(F.col(id_col) == probe_id)
-        .select(F.col(vec_col).alias("__probe_vec"))
+    probe = records.where(F.col(id_col) == probe_id).select(
+        *_probe_side(F.col(vec_col))
     )
     if strict and probe.limit(1).count() == 0:
         raise KeyError(f"Vector {probe_id} not found.")
-    sim = cosine(F.col(vec_col), F.col("__probe_vec"))
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    out = (
-        records.where(F.col(id_col) != probe_id)
-        .crossJoin(F.broadcast(probe))
-        .select(F.col(id_col), sim.alias("sim"))
-        .where(F.col("sim") >= threshold)
-        .orderBy(F.col("sim").desc(), id_col)
+    scored = _cosine_to_probe(
+        records.where(F.col(id_col) != probe_id).crossJoin(F.broadcast(probe)),
+        [F.col(id_col)],
+        vec_col,
+        round_to,
     )
-    return out.limit(k) if k is not None else out
+    passing = F.col("sim") >= threshold
+    order = [F.col("sim").desc(), F.col(id_col)]
+    if k is None:
+        return scored.where(passing).orderBy(*order)
+    return scored.orderBy(*order).limit(k).where(passing)
 
 
 def knn_bruteforce(
@@ -77,23 +112,25 @@ def knn_bruteforce(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each probe row.
 
-    probes must be small (they are broadcast); records can be arbitrarily
-    large. Output: (probe_id, id, sim, rank). Self-matches are excluded.
-    One shuffle (the per-probe window); everything else is a map.
+    probes must be small (they are broadcast, each with its norm); records
+    can be arbitrarily large. Output: (probe_id, id, sim, rank).
+    Self-matches are excluded. Each (record, probe) pair evaluates its dot
+    and the record's norm once (``_cosine_to_probe``). One shuffle (the
+    per-probe window); everything else is a map.
     """
     probe_id_col = probe_id_col or id_col
     probe_vec_col = probe_vec_col or vec_col
     p = probes.select(
-        F.col(probe_id_col).alias("probe_id"), F.col(probe_vec_col).alias("__pv")
+        F.col(probe_id_col).alias("probe_id"), *_probe_side(F.col(probe_vec_col))
     )
-    sim = cosine(F.col(vec_col), F.col("__pv"))
-    if round_to is not None:
-        sim = F.round(sim, round_to)
     w = W.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col(id_col))
     return (
-        records.crossJoin(F.broadcast(p))
-        .where(F.col(id_col) != F.col("probe_id"))
-        .select("probe_id", F.col(id_col), sim.alias("sim"))
+        _cosine_to_probe(
+            records.crossJoin(F.broadcast(p)).where(F.col(id_col) != F.col("probe_id")),
+            [F.col("probe_id"), F.col(id_col)],
+            vec_col,
+            round_to,
+        )
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
         .transform(lambda d: d.orderBy("probe_id", "rank") if ordered else d)

@@ -67,6 +67,9 @@ def test_topk_is_take_ordered(spark, sf_smoke):
         # permutation / 60 bit-vote subtrees.
         ("dedup_minhash_lsh", "md5(cast(lambda", 8),
         ("dedup_simhash", "md5(cast(lambda", 8),
+        # k=None findSimilar: the pushed threshold filter re-inlines the
+        # dot once beside the projection's own dot.
+        ("q25_find_similar", "zip_with(", 2),
     ],
 )
 def test_no_reinlined_expensive_expressions(spark, sf_smoke, name, expensive, max_occurrences):
@@ -76,6 +79,25 @@ def test_no_reinlined_expensive_expressions(spark, sf_smoke, name, expensive, ma
         f"{expensive!r} appears {count}x in the {name} plan — an expensive "
         f"expression got re-inlined into a multi-reference subtree"
     )
+
+
+def test_find_similar_topk_evaluates_kernel_once(spark, sf_smoke):
+    """With k, each record's dot is built once (one zip_with in the
+    executed plan) and the threshold Filter sits above the top-k, not
+    inside the broadcast join's condition."""
+    from sum_spark.operators.similarity import find_similar
+    from sum_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_smoke, "embeddings")
+    df = find_similar(emb, 1, 0.25, id_col="vec_id", vec_col="embedding", k=20)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("zip_with(") == 1
+    lines = plan.splitlines()
+    top = next(i for i, ln in enumerate(lines) if "TakeOrderedAndProject" in ln)
+    filters = [i for i, ln in enumerate(lines) if "Filter" in ln and ">= 0.25" in ln]
+    assert len(filters) == 1 and filters[0] < top
+    join = next(ln for ln in lines if "BroadcastNestedLoopJoin" in ln)
+    assert ">=" not in join
 
 
 def test_bm25_broadcasts_stats_and_takes_ordered(spark, sf_smoke):

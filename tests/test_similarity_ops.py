@@ -3,9 +3,14 @@ k-NN brute force, IVF buckets, multi-probe) and dedup scale options."""
 
 from __future__ import annotations
 
+import math
+import random
+import struct
+
 import pytest
 from pyspark.sql import functions as F
 
+from sum_spark.functions.vector import cosine, dot, magnitude
 from sum_spark.operators import dedup
 from sum_spark.operators.similarity import find_similar, knn_bruteforce, knn_ivf
 from sum_spark.sources.tables import load_table
@@ -45,6 +50,94 @@ def test_knn_bruteforce_k_per_probe(emb):
     out = knn_bruteforce(emb, probes, k=7, id_col="vec_id", vec_col="embedding")
     counts = {r["probe_id"]: r["n"] for r in out.groupBy("probe_id").agg(F.count("*").alias("n")).collect()}
     assert counts == {1: 7, 2: 7} or counts == {0: 7, 1: 7, 2: 7}
+
+
+NAN, INF = float("nan"), float("inf")
+_rng = random.Random(7)
+# Every edge the kernel has: NaN, -0.0, inf, zero norms (0.0 and -0.0),
+# a length mismatch, a null element, a null array, an empty array, and
+# exact ties (1, 11 and 12 are parallel), beside random vectors whose
+# sims straddle the thresholds.
+EDGE_VECTORS = [
+    (1, [1.0, 2.0, 3.0, 4.0]),
+    (2, [0.5, -1.0, 2.5, 0.0]),
+    (3, [NAN, 1.0, 1.0, 1.0]),
+    (4, [-0.0, 1.0, -2.0, 3.0]),
+    (5, [INF, 1.0, 0.0, 0.0]),
+    (6, [0.0, 0.0, 0.0, 0.0]),
+    (7, [1.0, 2.0, 3.0]),
+    (8, [1.0, None, 3.0, 4.0]),
+    (9, None),
+    (10, []),
+    (11, [2.0, 4.0, 6.0, 8.0]),
+    (12, [1.0, 2.0, 3.0, 4.0]),
+    (13, [-1.0, -2.0, -3.0, -4.0]),
+    (14, [-0.0, -0.0, -0.0, -0.0]),
+] + [(i, [_rng.uniform(-1.0, 1.0) for _ in range(4)]) for i in range(15, 40)]
+EDGE_PROBES = (1, 3, 6, 7, 8, 2)
+
+
+@pytest.fixture(scope="module")
+def edge_recs(spark):
+    # Cached: uncached, every query re-reads the local rows through
+    # Python workers, about 1 s per collect.
+    df = spark.createDataFrame(EDGE_VECTORS, "id long, data array<float>").cache()
+    yield df
+    df.unpersist()
+
+
+def _bits(pairs):
+    """(id, sim) pairs with sims as exact bits; every NaN is one value."""
+    return [
+        (i, None if s is None else "nan" if math.isnan(s) else struct.pack("<d", s))
+        for i, s in pairs
+    ]
+
+
+def _reference(recs, probe_id, threshold, round_to):
+    """The findSimilar contract written with the Column-level cosine:
+    every record but the probe, filtered on the threshold (None keeps
+    every row, NULL sims too), in (sim desc, id) order."""
+    probe = recs.where(F.col("id") == probe_id).select(F.col("data").alias("__q"))
+    sim = cosine("data", "__q")
+    if round_to is not None:
+        sim = F.round(sim, round_to)
+    out = recs.where(F.col("id") != probe_id).crossJoin(probe).select("id", sim.alias("sim"))
+    if threshold is not None:
+        out = out.where(F.col("sim") >= threshold)
+    return _bits(
+        (r["id"], r["sim"]) for r in out.orderBy(F.col("sim").desc(), "id").collect()
+    )
+
+
+def test_magnitude_fold_matches_self_dot(edge_recs):
+    rows = edge_recs.select(
+        "id", magnitude("data").alias("m"), F.sqrt(dot("data", "data")).alias("d")
+    ).collect()
+    assert _bits((r["id"], r["m"]) for r in rows) == _bits((r["id"], r["d"]) for r in rows)
+
+
+@pytest.mark.parametrize("round_to", [None, 4])
+def test_staged_kernel_bit_identical_to_cosine(edge_recs, round_to):
+    """find_similar and knn_bruteforce return exactly the (id, sim) lists
+    of the Column-level cosine: a zero norm gives 0.0 even against a
+    length mismatch, a mismatch with nonzero norms gives NULL (dropped by
+    any threshold), NaN sorts first and passes, and the threshold applied
+    after the top-k keeps the first k passing rows."""
+    for probe in EDGE_PROBES:
+        for threshold in (-1.0, 0.0, 0.5):
+            want = _reference(edge_recs, probe, threshold, round_to)
+            for k in (None, 1, 3, 1000):
+                got = find_similar(edge_recs, probe, threshold, k=k, round_to=round_to)
+                assert _bits(got.collect()) == want[:k], (probe, threshold, k)
+    probes = edge_recs.where(F.col("id").isin(*EDGE_PROBES))
+    unfiltered = {p: _reference(edge_recs, p, None, round_to) for p in EDGE_PROBES}
+    for k in (1, 3, 1000):
+        rows = knn_bruteforce(edge_recs, probes, k=k, round_to=round_to).collect()
+        for p in EDGE_PROBES:
+            mine = [r for r in rows if r["probe_id"] == p]
+            assert [r["rank"] for r in mine] == list(range(1, len(mine) + 1))
+            assert _bits((r["id"], r["sim"]) for r in mine) == unfiltered[p][:k], (p, k)
 
 
 def test_knn_ivf_subset_of_bruteforce_candidates(emb):
