@@ -467,8 +467,8 @@ def _batch_fold_plan(
     committed one either abort the compaction (``partial=False``:
     resume the stream to commit, stop cleanly, compact again) or —
     ``partial=True`` (VERDICT r6 #3) — are returned as ``pending`` so
-    the caller folds only the COMMITTED PREFIX and carries the tail
-    dirs through the swap untouched: compaction stays available for a
+    the caller folds only the COMMITTED PREFIX and leaves the tail
+    dirs in place, untouched: compaction stays available for a
     crash-prone long-lived stream, and the redelivery still lands in
     its own directory on resume. Without ``checkpoint`` the caller owns
     the clean-termination guarantee (an availableNow query that
@@ -593,27 +593,6 @@ def retire_from_inverted_index(
 _II_FAMILIES = ("postings", "terms", "meta")
 
 
-def _finish_index_swap(path: str, tmp: str) -> None:
-    """Swap the compacted family dirs into place. Idempotent: a family
-    whose ``tmp`` copy is gone was already swapped by an earlier
-    (crashed) attempt and is skipped, so re-running after a crash at
-    ANY point of the loop completes the remaining renames. The ``tmp``
-    dir (with its ``_DONE`` marker) is removed only at the very end —
-    its presence is what tells a re-run the merged data is durable."""
-    import os
-    import shutil
-
-    for fam in _II_FAMILIES:
-        src = os.path.join(tmp, fam)
-        dst = os.path.join(path, fam)
-        if not os.path.isdir(src):
-            continue  # already swapped before a crash
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)
-        os.rename(src, dst)
-    shutil.rmtree(tmp)
-
-
 def compact_inverted_index(
     spark,
     path: str,
@@ -656,7 +635,7 @@ def compact_inverted_index(
       mid-batch (folding an uncommitted batch would be silently
       overwritten by its redelivery — see _batch_fold_plan); with
       ``partial=True`` it instead folds the COMMITTED PREFIX and
-      carries the uncommitted tail dirs through the swap untouched
+      leaves the uncommitted tail dirs in place, untouched
       (VERDICT r6 #3) — compaction stays available however often the
       stream crashes, and the resumed stream's redelivery overwrites
       exactly its own tail dir. Without ``checkpoint`` the caller owns
@@ -664,87 +643,63 @@ def compact_inverted_index(
       target the batch layout via their ``batch_dir`` (negative id)
       parameter.
 
-    Run OFFLINE (no concurrent writer). Crash-safe the same way as
-    streaming/compact.compact_batches: the netted frames land under
-    ``<path>/_compacted`` (an underscore dir — invisible to readers)
-    with a ``_DONE`` marker before anything is deleted, so a re-run
-    after a crash mid-swap just finishes the renames.
+    Run OFFLINE (no concurrent writer). Crash-safe through
+    ``sum_spark.swap``: the netted frames are written once, under
+    ``<path>/_compacted``, and renamed in; the old dirs are dropped by
+    name, and a re-run after a crash first finishes or clears the swap.
 
     Returns {"n_docs", "postings_rows"} of the compacted index.
     """
     import os
-    import shutil
 
-    tmp = os.path.join(path, "_compacted")
-    done = os.path.join(tmp, "_DONE")
-    if os.path.isfile(done):
-        # Crash happened mid-swap: merged data is durable (the marker is
-        # written strictly after it), some old dirs may already be gone —
-        # finishing the renames is the only safe move.
-        _finish_index_swap(path, tmp)
-    elif os.path.isdir(tmp):
-        shutil.rmtree(tmp)  # incomplete earlier attempt; merged data not
-        # yet durable, old partials untouched — safe to redo from scratch
-        return compact_inverted_index(
-            spark, path, n_buckets, keep_batch_layout, checkpoint, partial
-        )
-    else:
-        sub, pending = "", []
-        if keep_batch_layout:
-            sub, pending = _batch_fold_plan(f"{path}/postings", checkpoint, partial)
-        drop = ["batch_id", "bucket"]
+    from sum_spark import swap
 
-        def _committed(raw):
-            # the uncommitted tail stays OUT of the fold (partition-
-            # pruned: batch_id is the partition column) and survives
-            # in its own dirs, copied into the staging area below
-            if pending and "batch_id" in raw.columns:
-                return raw.where(~F.col("batch_id").isin(pending))
-            return raw
+    staged = swap.staging(path)
+    sub, pending = "", []
+    if keep_batch_layout:
+        sub, pending = _batch_fold_plan(f"{path}/postings", checkpoint, partial)
 
-        raw_p = _committed(spark.read.parquet(f"{path}/postings"))
-        postings = (
-            raw_p.drop(*[c for c in drop if c in raw_p.columns])
-            .groupBy("term", "doc_id")
-            .agg(
-                F.sum("tf").cast("long").alias("tf"),
-                F.sum("dl").cast("int").alias("dl"),
-            )
-            .where(F.col("tf") > 0)
+    def _committed(fam):
+        # the uncommitted tail stays OUT of the fold (partition-pruned:
+        # batch_id is the partition column) and in its own dirs
+        raw = spark.read.parquet(f"{path}/{fam}")
+        if pending and "batch_id" in raw.columns:
+            raw = raw.where(~F.col("batch_id").isin(pending))
+        return raw.drop("batch_id", "bucket")
+
+    postings = (
+        _committed("postings")
+        .groupBy("term", "doc_id")
+        .agg(
+            F.sum("tf").cast("long").alias("tf"),
+            F.sum("dl").cast("int").alias("dl"),
         )
-        raw_t = _committed(spark.read.parquet(f"{path}/terms"))
-        terms = (
-            raw_t.drop(*[c for c in drop if c in raw_t.columns])
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"))
-            .where(F.col("df") > 0)
+        .where(F.col("tf") > 0)
+    )
+    terms = (
+        _committed("terms")
+        .groupBy("term")
+        .agg(F.sum("df").cast("long").alias("df"))
+        .where(F.col("df") > 0)
+    )
+    meta = _committed("meta").agg(
+        F.sum("n").cast("long").alias("n"),
+        F.sum("sum_dl").cast("long").alias("sum_dl"),
+    )
+    if not postings.head(1):
+        # An all-retired index nets to nothing; the swap would strand
+        # an unreadable empty layout. Deleting the index is the
+        # caller's explicit move, never a compaction side effect.
+        raise ValueError(
+            "index nets to empty — nothing to compact; delete the "
+            "index directory instead"
         )
-        raw_m = _committed(spark.read.parquet(f"{path}/meta"))
-        meta = raw_m.drop(*[c for c in drop if c in raw_m.columns]).agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("sum_dl").cast("long").alias("sum_dl"),
-        )
-        if not postings.head(1):
-            # An all-retired index nets to nothing; the swap would strand
-            # an unreadable empty layout. Deleting the index is the
-            # caller's explicit move, never a compaction side effect.
-            raise ValueError(
-                "index nets to empty — nothing to compact; delete the "
-                "index directory instead"
-            )
-        _write_index_frames(postings, terms, meta, tmp, n_buckets, "overwrite", sub)
-        # Uncommitted tail batches ride through the swap by value: their
-        # dirs are copied into the staging area BEFORE the durability
-        # marker, so a crash-replay restores them too, and the resumed
-        # stream's redelivery overwrites them idempotently.
-        for fam in _II_FAMILIES:
-            for i in pending:
-                src = os.path.join(path, fam, f"batch_id={i}")
-                if os.path.isdir(src):
-                    shutil.copytree(src, os.path.join(tmp, fam, f"batch_id={i}"))
-        with open(done, "w") as fh:
-            fh.write("1")
-        _finish_index_swap(path, tmp)
+    _write_index_frames(postings, terms, meta, staged, n_buckets, "overwrite", sub)
+    # every old entry of every family goes, except the uncommitted tail
+    # (the resumed stream's redelivery overwrites it idempotently)
+    keep = {f"batch_id={i}" for i in pending}
+    old = [os.path.join(f, n) for f in _II_FAMILIES for n in os.listdir(f"{path}/{f}")]
+    swap.commit(path, [o for o in old if os.path.basename(o) not in keep])
     out_p = spark.read.parquet(f"{path}/postings")
     # meta stays a sum of partials after a partial fold (fold row + the
     # uncommitted tail's rows), so the stat aggregates like any reader

@@ -1941,55 +1941,59 @@ def compact_pq_index(
     appends/retires keep composing. Search results are unchanged by
     construction; what shrinks is file count and the per-query netting
     work. The codebook is immutable and untouched. Run OFFLINE (no
-    concurrent writer). Crash-safe: the netted rows land under
-    ``<path>/_compacted`` (underscore dir — invisible to readers) with
-    a ``_DONE`` marker before any old partition directory is deleted;
-    the swap (delete old ``coarse=*`` dirs, COPY the compacted ones in,
-    drop the staging dir last) is idempotent, so a re-run after a crash
-    at any point just replays it. ``keep_batch_layout=True`` folds a
-    batch-laid-out (stream-grown) index into ``batch_id=<max id>``
-    instead of flattening, so the stream can RESUME afterwards; pass
+    concurrent writer). Crash-safe through ``sum_spark.swap``: the
+    netted rows are written once, under ``<path>/_compacted``, and
+    renamed in; the old ``coarse=``/``batch_id=`` dirs are dropped by
+    name, and a re-run after a crash first finishes or clears the swap.
+    ``keep_batch_layout=True`` folds a batch-laid-out (stream-grown)
+    index into ``batch_id=<max id>`` instead of flattening, so the
+    stream can RESUME afterwards; pass
     the stream's ``checkpoint`` and the compaction refuses if the
     stream stopped mid-batch (folding an uncommitted batch would be
     silently overwritten by its redelivery — search._batch_fold_plan);
     ``partial=True`` (VERDICT r6 #3) instead folds the COMMITTED PREFIX
-    and carries the uncommitted tail dirs through the swap untouched,
-    so a crash-prone long-lived stream can always compact — on resume
-    the redelivery overwrites exactly its own tail dir. Without a
+    and leaves the uncommitted tail dirs in place, so a crash-prone
+    long-lived stream can always compact — on resume the redelivery
+    overwrites exactly its own tail dir. Without a
     checkpoint the caller owns the clean-termination guarantee. Flat
     and batch layouts must never mix under one root, the read fails.
     An index whose rows all net out refuses to compact rather than
     stranding an unreadable empty layout. Returns {"n_rows"} of the
     compacted index (tail partials included, as reads see them)."""
-    import os
-    import shutil
+    return _compact_rows_index(
+        spark, path, pq_index_rows, "coarse", keep_batch_layout, checkpoint, partial
+    )
 
+
+def _compact_rows_index(
+    spark, path, live_rows, part_col, keep_batch_layout, checkpoint, partial
+) -> dict:
+    """compact_pq_index and compact_ivf_index; ``live_rows`` is
+    pq_index_rows or ivf_index_rows (the id column's name is irrelevant
+    to the netting, see pq_index_rows)."""
+    import os
+
+    from sum_spark import swap
     from sum_spark.operators.search import _batch_fold_plan
 
-    def _write(staged: str) -> None:
-        sub, pending = ("", [])
-        if keep_batch_layout:
-            sub, pending = _batch_fold_plan(path, checkpoint, partial)
-        netted = pq_index_rows(spark, path, id_col, exclude_batch_ids=pending)
-        if not netted.head(1):
-            raise ValueError(
-                "index nets to empty — nothing to compact; delete the "
-                "index directory instead"
-            )
-        (
-            netted.withColumn("w", F.lit(1))
-            .write.partitionBy("coarse")
-            .parquet(staged + sub, mode="overwrite")
+    staged = swap.staging(path)
+    sub, pending = ("", [])
+    if keep_batch_layout:
+        sub, pending = _batch_fold_plan(path, checkpoint, partial)
+    netted = live_rows(spark, path, exclude_batch_ids=pending)
+    if not netted.head(1):
+        raise ValueError(
+            "index nets to empty — nothing to compact; delete the "
+            "index directory instead"
         )
-        # the uncommitted tail rides through the swap by value: staged
-        # BEFORE the durability marker, so a crash-replay restores it too
-        for i in pending:
-            shutil.copytree(
-                os.path.join(path, f"batch_id={i}"),
-                os.path.join(staged, f"batch_id={i}"),
-            )
-
-    _stage_and_swap(path, _write, ("coarse=", "batch_id="))
+    (
+        netted.withColumn("w", F.lit(1))
+        .write.partitionBy(part_col)
+        .parquet(staged + sub, mode="overwrite")
+    )
+    keep = {f"batch_id={i}" for i in pending}
+    old = [n for n in os.listdir(path) if n.startswith((f"{part_col}=", "batch_id="))]
+    swap.commit(path, [n for n in old if n not in keep])
     # attest BEFORE dropping the marker: a crash between leaves marker
     # present -> reads net (identity on the folded rows) -> safe. This is
     # also the one-time legacy migration (ADVICE r7): a pre-marker index
@@ -2001,43 +2005,6 @@ def compact_pq_index(
     return {"n_rows": spark.read.parquet(path).count()}
 
 
-def _stage_and_swap(path: str, write_staged, delete_prefixes: tuple[str, ...]) -> None:
-    """Crash-safe rewrite of a partitioned index table in place:
-    ``write_staged(<path>/_compacted/rows)`` materializes the compacted
-    rows (underscore dir — invisible to readers), a ``_DONE`` marker
-    records durability, then the swap deletes every old dir matching a
-    ``delete_prefixes`` entry and COPIES the staged partition dirs in.
-    Old and already-copied partition dirs are indistinguishable by
-    name, so the replay-safe move is delete-all-then-copy-all
-    (copytree, not rename, keeps the staging copy intact until the
-    final rmtree): a re-run after a crash at ANY point — marker present
-    — just replays the idempotent swap; a crash BEFORE the marker
-    leaves the old partials untouched and the next run redoes the merge
-    from scratch. ``delete_prefixes`` must cover every partition-dir
-    name the STAGED layout can produce (it always includes the staged
-    dirs' own prefixes, so replays re-delete partially copied dirs)."""
-    import os
-    import shutil
-
-    tmp = os.path.join(path, "_compacted")
-    done = os.path.join(tmp, "_DONE")
-    if not os.path.isfile(done):
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)  # merge wasn't durable; partials untouched
-        write_staged(os.path.join(tmp, "rows"))
-        with open(done, "w") as fh:
-            fh.write("1")
-    for name in os.listdir(path):
-        if any(name.startswith(p) for p in delete_prefixes):
-            shutil.rmtree(os.path.join(path, name))
-    rows_dir = os.path.join(tmp, "rows")
-    for name in os.listdir(rows_dir):
-        full = os.path.join(rows_dir, name)
-        if os.path.isdir(full):
-            shutil.copytree(full, os.path.join(path, name))
-    shutil.rmtree(tmp)
-
-
 def compact_ivf_index(
     spark,
     path: str,
@@ -2047,46 +2014,17 @@ def compact_ivf_index(
 ) -> dict:
     """compact_pq_index for the raw-vector IVF index: materializes
     ivf_index_rows' netting back into the canonical bucket-partitioned
-    layout (w reset to +1), crash-safe via the same staged idempotent
-    swap; ``keep_batch_layout``/``checkpoint``/``partial`` and the
+    layout (w reset to +1), crash-safe through the same ``swap.py``
+    staged swap; ``keep_batch_layout``/``checkpoint``/``partial`` and the
     all-netted-out refusal as in compact_pq_index (``partial=True``
-    folds the committed prefix, carrying uncommitted tail dirs through
-    the swap untouched; tombstones must target committed rows — the
+    folds the committed prefix and leaves uncommitted tail dirs in
+    place; tombstones must target committed rows — the
     retire contract already requires the previous SNAPSHOT's rows).
     Search results unchanged; file count and per-query netting work
     shrink. Run OFFLINE. Returns {"n_rows"}."""
-    import os
-    import shutil
-
-    from sum_spark.operators.search import _batch_fold_plan
-
-    def _write(staged: str) -> None:
-        sub, pending = ("", [])
-        if keep_batch_layout:
-            sub, pending = _batch_fold_plan(path, checkpoint, partial)
-        netted = ivf_index_rows(spark, path, exclude_batch_ids=pending)
-        if not netted.head(1):
-            raise ValueError(
-                "index nets to empty — nothing to compact; delete the "
-                "index directory instead"
-            )
-        (
-            netted.withColumn("w", F.lit(1))
-            .write.partitionBy("bucket")
-            .parquet(staged + sub, mode="overwrite")
-        )
-        for i in pending:
-            shutil.copytree(
-                os.path.join(path, f"batch_id={i}"),
-                os.path.join(staged, f"batch_id={i}"),
-            )
-
-    _stage_and_swap(path, _write, ("bucket=", "batch_id="))
-    _attest(path)  # see compact_pq_index: also the legacy migration
-    marker = _tombstone_marker(path)
-    if os.path.isfile(marker):
-        os.remove(marker)
-    return {"n_rows": spark.read.parquet(path).count()}
+    return _compact_rows_index(
+        spark, path, ivf_index_rows, "bucket", keep_batch_layout, checkpoint, partial
+    )
 
 
 def retrain_pq_index(
@@ -2109,10 +2047,10 @@ def retrain_pq_index(
     deletion-as-negation bit-exact), so over a drifting corpus the
     quantization error grows unbounded; this op trains a FRESH book on
     exactly the live ids, re-encodes them all, and swaps rows AND
-    codebook together through the crash-safe staged-swap machinery
-    (_stage_and_swap — the codebook is staged next to the rows, so a
-    crash at any point leaves either the complete old index or the
-    complete new one after a replay, never a rows/book mismatch).
+    codebook together through one ``swap.py`` staged swap (the book is
+    staged next to the rows, so a crash at any point leaves either the
+    complete old index or the complete new one after a replay, never a
+    rows/book mismatch).
 
     ``records`` must carry the raw vectors of (at least) every live id
     (the index stores only codes — the same corpus-join the rerank
@@ -2130,102 +2068,102 @@ def retrain_pq_index(
     OFFLINE. Returns the new codebook."""
     import os
 
+    from sum_spark import swap
     from sum_spark.operators.embeddings import _pq_codes_numpy, pq_code_cols
     from sum_spark.operators.search import _batch_fold_plan
 
-    def _write(staged: str) -> None:
-        sub = ""
-        if keep_batch_layout:
-            try:
-                sub, _pending = _batch_fold_plan(path, checkpoint, partial=False)
-            except ValueError as e:
-                if "partial=True" not in str(e):
-                    raise
-                # _batch_fold_plan's advice ("pass partial=True") names a
-                # parameter retrain deliberately lacks: a partial retrain
-                # would mix old-book tail codes with the new book and
-                # corrupt every ADC (ADVICE r7)
-                raise ValueError(
-                    str(e).split(" — or pass")[0]
-                    + ". retrain_pq_index has no partial mode (tail rows "
-                    "are encoded under the OLD book; mixing books in one "
-                    "index corrupts ADC): resume the stream to commit the "
-                    "tail, stop cleanly, then retrain."
-                ) from None
-        _old_book, old_res = _load_books(spark, path)
-        live = pq_index_rows(spark, path, id_col).select(id_col)
-        survivors = records.join(live, id_col).select(id_col, vec_col)
-        # n_cells is ALSO the resize path (VERDICT r7 #4): 'auto'
-        # re-derives ~4*sqrt(live N) at retrain time, so an index whose
-        # corpus grew 10x comes out of retrain with ~3.2x the cells and
-        # a ~flat per-query scanned fraction. Equals write_pq_index
-        # from scratch over the survivors row-for-row (same recipe).
-        cells = (
-            auto_cells(survivors.count())
-            if n_cells == "auto"
-            else int(n_cells) if n_cells is not None else int(n_codes)
-        )
-        book = train_pq_codebook(survivors, cells, id_col, vec_col)
-        # from the ACTUAL book, never the requested cells — see
-        # write_pq_index (a trained book can come out smaller than
-        # requested via empty hash buckets, and maintenance decides by
-        # the stored book's size)
-        large = len(book) > _LARGE_K
-        res_book = None
-        if old_res is not None:
-            # a residual index retrains BOTH books with the recipe the
-            # index was BUILT with: res_iters=None (default) reads the
-            # recipe recorded next to the stored book, so a default
-            # retrain can never silently swap a Lloyd-trained residual
-            # book for the degeneracy-prone one-step fallback
-            ri = _read_res_iters(path) if res_iters is None else int(res_iters)
-            res = _residualize(
-                survivors, book, id_col, vec_col,
-                backend="join" if large else "catalyst",
-            ).persist()
-            trained = _train_residual_book(res, n_codes, id_col, ri)
-            res_book = (
-                trained
-                if trained is not None
-                else train_pq_codebook(res, int(n_codes), id_col, "__res")
-            )
-            # one projection, no codes-join — the write_pq_index /
-            # _pq_rows encode shape (guide §2.4)
-            if len(res_book) > _LARGE_K:
-                rows = _pq_codes_numpy(
-                    res, m, sorted(res_book.items()), id_col, "__res",
-                    carry_coarse=True,
-                ).select(F.col("vec_id").alias(id_col), "coarse", "codes")
-            else:
-                rows = res.select(
-                    F.col(id_col),
-                    "coarse",
-                    F.array(
-                        *pq_code_cols(sorted(res_book.items()), m, "__res")
-                    ).alias("codes"),
-                )
-        else:
-            rows = _pq_rows(survivors, book, None, m, id_col, vec_col)
+    staged = swap.staging(path)
+    sub = ""
+    if keep_batch_layout:
         try:
-            (
-                rows.withColumn("w", F.lit(1))
-                .write.partitionBy("coarse")
-                .parquet(staged + sub, mode="overwrite")
+            sub, _pending = _batch_fold_plan(path, checkpoint, partial=False)
+        except ValueError as e:
+            if "partial=True" not in str(e):
+                raise
+            # _batch_fold_plan's advice ("pass partial=True") names a
+            # parameter retrain deliberately lacks: a partial retrain
+            # would mix old-book tail codes with the new book and
+            # corrupt every ADC (ADVICE r7)
+            raise ValueError(
+                str(e).split(" — or pass")[0]
+                + ". retrain_pq_index has no partial mode (tail rows "
+                "are encoded under the OLD book; mixing books in one "
+                "index corrupts ADC): resume the stream to commit the "
+                "tail, stop cleanly, then retrain."
+            ) from None
+    _old_book, old_res = _load_books(spark, path)
+    live = pq_index_rows(spark, path, id_col).select(id_col)
+    survivors = records.join(live, id_col).select(id_col, vec_col)
+    # n_cells is ALSO the resize path (VERDICT r7 #4): 'auto'
+    # re-derives ~4*sqrt(live N) at retrain time, so an index whose
+    # corpus grew 10x comes out of retrain with ~3.2x the cells and
+    # a ~flat per-query scanned fraction. Equals write_pq_index
+    # from scratch over the survivors row-for-row (same recipe).
+    cells = (
+        auto_cells(survivors.count())
+        if n_cells == "auto"
+        else int(n_cells) if n_cells is not None else int(n_codes)
+    )
+    book = train_pq_codebook(survivors, cells, id_col, vec_col)
+    # from the ACTUAL book, never the requested cells — see
+    # write_pq_index (a trained book can come out smaller than
+    # requested via empty hash buckets, and maintenance decides by
+    # the stored book's size)
+    large = len(book) > _LARGE_K
+    res_book = None
+    if old_res is not None:
+        # a residual index retrains BOTH books with the recipe the
+        # index was BUILT with: res_iters=None (default) reads the
+        # recipe recorded next to the stored book, so a default
+        # retrain can never silently swap a Lloyd-trained residual
+        # book for the degeneracy-prone one-step fallback
+        ri = _read_res_iters(path) if res_iters is None else int(res_iters)
+        res = _residualize(
+            survivors, book, id_col, vec_col,
+            backend="join" if large else "catalyst",
+        ).persist()
+        trained = _train_residual_book(res, n_codes, id_col, ri)
+        res_book = (
+            trained
+            if trained is not None
+            else train_pq_codebook(res, int(n_codes), id_col, "__res")
+        )
+        # one projection, no codes-join — the write_pq_index /
+        # _pq_rows encode shape (guide §2.4)
+        if len(res_book) > _LARGE_K:
+            rows = _pq_codes_numpy(
+                res, m, sorted(res_book.items()), id_col, "__res",
+                carry_coarse=True,
+            ).select(F.col("vec_id").alias(id_col), "coarse", "codes")
+        else:
+            rows = res.select(
+                F.col(id_col),
+                "coarse",
+                F.array(
+                    *pq_code_cols(sorted(res_book.items()), m, "__res")
+                ).alias("codes"),
             )
-        finally:
-            if old_res is not None:
-                res.unpersist()
-        # stage the new book(s) NEXT TO the rows: the swap replaces all
-        # or none (the _codebook prefix is in the delete set below and
-        # covers _codebook_res too; the recipe file rides inside the
-        # staged book dir)
-        write_pq_codebook(spark, book, staged)
-        if res_book is not None:
-            write_pq_codebook(spark, res_book, staged, name="_codebook_res")
-            _write_res_iters(staged, ri)
-
-    _stage_and_swap(path, _write, ("coarse=", "batch_id=", "_codebook"))
-    _attest(path)  # see compact_pq_index: also the legacy migration
+    else:
+        rows = _pq_rows(survivors, book, None, m, id_col, vec_col)
+    try:
+        (
+            rows.withColumn("w", F.lit(1))
+            .write.partitionBy("coarse")
+            .parquet(staged + sub, mode="overwrite")
+        )
+    finally:
+        if old_res is not None:
+            res.unpersist()
+    # stage the new book(s) NEXT TO the rows: the swap replaces all
+    # or none (the _codebook prefix in the drop set also covers
+    # _codebook_res; the recipe file rides inside the staged book dir)
+    write_pq_codebook(spark, book, staged)
+    if res_book is not None:
+        write_pq_codebook(spark, res_book, staged, name="_codebook_res")
+        _write_res_iters(staged, ri)
+    prefixes = ("coarse=", "batch_id=", "_codebook")
+    swap.commit(path, [n for n in os.listdir(path) if n.startswith(prefixes)])
+    _attest(path)  # see _compact_rows_index: also the legacy migration
     marker = _tombstone_marker(path)
     if os.path.isfile(marker):
         os.remove(marker)

@@ -70,20 +70,22 @@ def compact_parquet_dir(
     ``<path>.__compacted`` first, the original is then removed and the
     staged dir renamed into place. A crash before the swap leaves the
     original untouched (stale staging is overwritten on retry); a crash
-    between remove and rename is recovered here on the next call by
-    finishing the rename (the staged dir carries parquet's _SUCCESS
-    marker, so completeness is checkable). Returns the file count.
+    later, even part-way through the removal, is recovered here on the
+    next call by dropping what is left of the original and finishing
+    the rename (a staged dir with parquet's _SUCCESS marker is
+    complete). Returns the file count.
     """
     import math
     import os
     import shutil
 
     staged = path.rstrip("/") + ".__compacted"
+    if os.path.exists(os.path.join(staged, "_SUCCESS")):
+        if os.path.isdir(path):  # possibly only part of the original
+            shutil.rmtree(path)
+        os.rename(staged, path)
     if not os.path.isdir(path):
-        if os.path.isdir(staged) and os.path.exists(os.path.join(staged, "_SUCCESS")):
-            os.rename(staged, path)  # finish an interrupted swap
-        else:
-            raise FileNotFoundError(path)
+        raise FileNotFoundError(path)
 
     def _bytes(d: str) -> int:
         total = 0

@@ -48,9 +48,9 @@ point operation thus pays no Spark job, no Python worker, no query
 planning and no commit protocol. Scans — ``df``, ``list``,
 ``find_by_meta``, ``count`` — and ``delete_many``, ``compact`` and
 adoption stay Spark jobs on the ``_live`` view. ``compact()`` folds
-every bucket's partials in ONE Spark write into a hidden ``_compact-*``
-staging directory, then swaps each bucket in by rename; opening the store
-repairs whatever an interrupted fold or write left behind. Unlike the
+every bucket's partials in ONE Spark write, then swaps each bucket in by
+rename (``swap.py``); opening the store repairs whatever an interrupted
+fold or write left behind. Unlike the
 reference's one file per record, append-only partials plus periodic
 compaction bound file count AND rewrite amplification. The store
 assumes a local POSIX path (listing, rename, the marker file). A
@@ -82,6 +82,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from sum_spark import swap
+
 RECORD_SCHEMA = StructType(
     [
         StructField("id", LongType(), False),
@@ -111,7 +113,7 @@ _ARROW_WRITE_SCHEMA = pa.schema(
     ]
 )
 
-# A bucket directory, and what an interrupted fold leaves beside one.
+# A bucket directory, and what an interrupted earlier fold left beside one.
 _BUCKET_DIR = re.compile(r"b=-?\d+")
 _SWAP_LEFTOVER = re.compile(r"(b=-?\d+)\.(old|tmp)-\w+")
 
@@ -227,8 +229,9 @@ class RecordStore:
         open: drop fold staging directories and hidden half-written
         partials; a bucket renamed aside (``b=<k>.old-*``) goes back
         when the crash came before its replacement landed and is dropped
-        otherwise; staged bucket rewrites (``b=<k>.tmp-*``) are dropped.
-        Each step restores the rows as they were before the crash. The
+        otherwise; staged bucket rewrites (``b=<k>.tmp-*``) are dropped;
+        then ``swap.recover`` finishes or drops a ``_compacted`` fold.
+        Each step keeps the rows as they were before the crash. The
         store is single-writer, so nothing found here is still in flight."""
         for entry in sorted(os.listdir(self.path)):
             p = os.path.join(self.path, entry)
@@ -245,6 +248,7 @@ class RecordStore:
                 for f in os.listdir(p):
                     if f.startswith(".part-") and f.endswith(".tmp"):
                         os.remove(os.path.join(p, f))
+        swap.recover(self.path)
 
     # -- merge-on-read netting ------------------------------------------------
 
@@ -472,26 +476,19 @@ class RecordStore:
         job that bounds file count and removes the per-read netting work
         (the tombstone marker comes off afterwards, so reads return to
         the pass-through path). ONE Spark write, with a single shuffle
-        by bucket whatever the bucket count, puts the live view into a
-        hidden staging directory; each bucket is then swapped in by
-        rename. A bucket with no live row
-        left is swapped for an empty directory: were its old partials
+        by bucket whatever the bucket count, stages the live view for
+        ``swap.commit`` to rename each bucket in. A bucket with no live
+        row left is swapped for an empty directory: were its old partials
         kept, clearing the marker would serve its deleted rows again.
         A crash at any point leaves a state that reads the same rows and
         that ``_recover`` repairs at the next open."""
-        buckets = self._bucket_dirs()
-        staging = os.path.join(self.path, f"_compact-{uuid.uuid4().hex}")
-        self._live(by_bucket=True).write.partitionBy("b").parquet(staging)
-        for bucket, target in sorted(buckets.items()):
-            folded = os.path.join(staging, f"b={bucket}")
-            os.makedirs(folded, exist_ok=True)
-            old = f"{target}.old-{uuid.uuid4().hex[:8]}"
-            os.rename(target, old)
-            os.rename(folded, target)
-            shutil.rmtree(old)
+        staged = swap.staging(self.path)
+        self._live(by_bucket=True).write.partitionBy("b").parquet(staged)
+        for bucket in self._bucket_dirs():
+            os.makedirs(os.path.join(staged, f"b={bucket}"), exist_ok=True)
+        swap.commit(self.path, drop=[])
         if os.path.isfile(self._marker):
             os.remove(self._marker)
-        shutil.rmtree(staging)
 
     def list(self, page: int = 1, per_page: int = 10) -> tuple[int, list[Row]]:
         """Ordered pagination returning (total, rows)

@@ -75,7 +75,7 @@ def streaming_index_vectors(
     writing the arriving batch, keeping search-side netting and file
     counts bounded on a long-lived stream (VERDICT r8 #3). Writer-safe
     inside the sink (foreachBatch serializes); a stale dir from a
-    mid-batch crash rides through as the uncommitted tail."""
+    mid-batch crash stays in place as the uncommitted tail."""
     from sum_spark.operators.similarity import (
         _attest,
         _encode_with_stored_book,

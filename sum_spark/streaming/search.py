@@ -50,7 +50,7 @@ def streaming_index_documents(
     writing the arriving batch, so query-side file counts stay bounded
     on a long-lived stream without manual compaction (VERDICT r8 #3).
     Writer-safe inside the sink (foreachBatch serializes); a stale dir
-    from a mid-batch crash rides through as the uncommitted tail and
+    from a mid-batch crash stays in place as the uncommitted tail and
     its redelivery overwrites exactly itself."""
     from pyspark.sql import functions as F
 

@@ -66,3 +66,22 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_correct() -> str:
     return SF_CORRECT
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_on(monkeypatch, module, name, nth):
+    """Make ``module.name`` raise on its ``nth`` call (1-based), as if the
+    process died right there; earlier calls go through."""
+    real = getattr(module, name)
+    calls = []
+
+    def wrapper(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == nth:
+            raise _Crash(name)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, wrapper)

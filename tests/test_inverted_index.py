@@ -225,7 +225,6 @@ def test_compact_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
     is durable) tells the re-run to finish the remaining renames instead
     of discarding the merge."""
     import os
-    import shutil
 
     import pytest
 
@@ -239,22 +238,24 @@ def test_compact_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
     write_inverted_index(docs.where(F.col("doc_id") < 3), path)
     S.append_to_inverted_index(docs.where(F.col("doc_id") == 3), path)
 
-    real = S._finish_index_swap
+    real = os.rename
+    calls = {"n": 0}
 
-    def crash_after_first_family(p, tmp):
-        fam = S._II_FAMILIES[0]
-        src, dst = os.path.join(tmp, fam), os.path.join(p, fam)
-        shutil.rmtree(dst)
-        os.rename(src, dst)
-        raise RuntimeError("simulated crash mid-swap")
+    def crash_after_first_family(src, dst, **kw):
+        # rename 1 commits _DONE, 2-3 swap the first family (old one
+        # aside, staged one in), 4 would start on the second family
+        calls["n"] += 1
+        if calls["n"] == 4:
+            raise RuntimeError("simulated crash mid-swap")
+        return real(src, dst, **kw)
 
-    monkeypatch.setattr(S, "_finish_index_swap", crash_after_first_family)
+    monkeypatch.setattr(os, "rename", crash_after_first_family)
     with pytest.raises(RuntimeError, match="mid-swap"):
         S.compact_inverted_index(spark, path)
-    # merged data durable under _compacted, marker present, postings
-    # already swapped, terms/meta not yet
+    # merged data durable under _compacted, marker present, the first
+    # family already swapped, the other two not yet
     assert os.path.isfile(os.path.join(path, "_compacted", "_DONE"))
-    monkeypatch.setattr(S, "_finish_index_swap", real)
+    monkeypatch.setattr(os, "rename", real)
 
     S.compact_inverted_index(spark, path)  # recovery run
     assert not os.path.isdir(os.path.join(path, "_compacted"))

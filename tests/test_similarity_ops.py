@@ -654,7 +654,6 @@ def test_compact_pq_index_folds_tombstones_and_recovers_from_crash(
     by re-running (the staged copy stays durable until the final
     cleanup)."""
     import os
-    import shutil
 
     import numpy as np
     import pytest
@@ -688,17 +687,17 @@ def test_compact_pq_index_folds_tombstones_and_recovers_from_crash(
 
     n_before = len(_files(p))
 
-    # crash on the SECOND partition-dir copy of the swap
-    real_copytree = shutil.copytree
+    # crash on the SECOND rename of the swap (the first commits _DONE)
+    real_rename = os.rename
     calls = {"n": 0}
 
     def crashing(src, dst, **kw):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("simulated crash mid-swap")
-        return real_copytree(src, dst, **kw)
+        return real_rename(src, dst, **kw)
 
-    monkeypatch.setattr(shutil, "copytree", crashing)
+    monkeypatch.setattr(os, "rename", crashing)
     with pytest.raises(RuntimeError, match="mid-swap"):
         S.compact_pq_index(spark, p)
     assert os.path.isfile(os.path.join(p, "_compacted", "_DONE"))
@@ -851,7 +850,6 @@ def test_retrain_pq_index_closes_drift_and_survives_crash(spark, tmp_path, monke
     book's on a drifted corpus; (c) a crash mid-swap is repaired by
     re-running, and searches serve from the new book afterwards."""
     import os
-    import shutil
 
     import numpy as np
     import pytest
@@ -887,17 +885,17 @@ def test_retrain_pq_index_closes_drift_and_survives_crash(spark, tmp_path, monke
                 )
         return tot
 
-    # (c) crash on the second dir copy of the swap, then recover
-    real_copytree = shutil.copytree
+    # (c) crash on the second rename of the swap, then recover
+    real_rename = os.rename
     calls = {"n": 0}
 
     def crashing(src, dst, **kw):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("simulated crash mid-swap")
-        return real_copytree(src, dst, **kw)
+        return real_rename(src, dst, **kw)
 
-    monkeypatch.setattr(shutil, "copytree", crashing)
+    monkeypatch.setattr(os, "rename", crashing)
     with pytest.raises(RuntimeError, match="mid-swap"):
         S.retrain_pq_index(spark, p, corpus, m=2, n_codes=4)
     assert os.path.isfile(os.path.join(p, "_compacted", "_DONE"))

@@ -158,6 +158,29 @@ def test_compact_parquet_dir_recovers_interrupted_swap(spark, sf_smoke, tmp_path
     assert not os.path.isdir(staged)
 
 
+def test_compact_parquet_dir_recovers_partly_removed_original(spark, tmp_path):
+    """Crash inside the removal of the original: a complete staged copy
+    next to what is left of the original. The next call must keep the
+    staged copy, not rewrite the table from the remnant."""
+    import glob
+    import os
+    import shutil
+
+    from sum_spark.sources.formats import compact_parquet_dir
+
+    path = str(tmp_path / "tab")
+    spark.range(10_000).repartition(8).write.parquet(path)
+    staged = path + ".__compacted"
+    shutil.copytree(path, staged)  # the staged copy, complete with _SUCCESS
+    for f in sorted(glob.glob(os.path.join(path, "part-*")))[:5]:
+        os.remove(f)
+
+    compact_parquet_dir(spark, path, target_mb=64)
+    assert spark.read.parquet(path).count() == 10_000
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(10_000))
+    assert not os.path.isdir(staged)
+
+
 def test_expire_partitions_drops_only_failing_values(spark, sf_smoke, tmp_path):
     from pyspark.sql import functions as F
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import _Crash, _crash_on
 from sum_spark.store import IdCollision, RecordNotFound, RecordStore
 
 
@@ -397,25 +398,6 @@ def _rows(store) -> dict:
         )
         for r in store.df.collect()
     }
-
-
-class _Crash(Exception):
-    pass
-
-
-def _crash_on(monkeypatch, module, name, nth):
-    """Make ``module.name`` raise on its ``nth`` call (1-based), as if the
-    process died right there; earlier calls go through."""
-    real = getattr(module, name)
-    calls = []
-
-    def wrapper(*args, **kwargs):
-        calls.append(args)
-        if len(calls) == nth:
-            raise _Crash(name)
-        return real(*args, **kwargs)
-
-    monkeypatch.setattr(module, name, wrapper)
 
 
 def _netted_store(spark, path):

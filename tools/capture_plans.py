@@ -1,7 +1,7 @@
 """Capture .explain('formatted') for every registry entry into
-plans/r13/<name>_<tag>.txt (tag = before/after). Usage:
+<out_dir>/<name>_<tag>.txt (tag = before/after, say). Usage:
 
-    python tools_r13/capture_plans.py before [name ...]
+    SPARK_GRAFT_SF_DIR=<tables dir> python tools/capture_plans.py <out_dir> [tag] [name ...]
 
 Construction side effects (stored-index builds) run once per process as
 in the bench; plans reflect the steady-state serve shape.
@@ -15,10 +15,12 @@ from sum_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
+    if len(sys.argv) < 2 or "SPARK_GRAFT_SF_DIR" not in os.environ:
+        sys.exit(__doc__)
+    out_dir = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    only = set(sys.argv[3:])
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark()
     from sum_spark.queries import REGISTRY
