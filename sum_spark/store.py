@@ -30,8 +30,8 @@ and keeps positive sums; a bucket/id filter on it still prunes to the
 id's bucket directory because the partition column is a grouping key
 (the filter pushes below the aggregate — the pq_index_rows plan shape).
 A ``_tombstones`` marker file, written by the first mutation and removed
-by ``compact``, lets a never-mutated table skip the netting aggregate
-entirely (ADVICE r6 #4).
+by ``compact`` once no bucket holds a delta, lets a table of unique
+live rows skip the netting aggregate entirely (ADVICE r6 #4).
 
 Point operations bypass Spark. Like the reference, which persists a
 record by writing its file directly (node/storage/saver.go:12-20), a
@@ -41,22 +41,34 @@ that Spark's listing skips, then renamed into place, so each partial
 file appears whole or not at all. Point lookups — ``read``, the read
 before ``update``/``delete``, and the collision checks of the
 create-with-id calls — read the id's bucket files from the driver too
-(``_lookup``: id filter pushed into the pyarrow scan, then the same
-netting rule as ``_live``, with Spark's grouping equality for floats),
-as the reference serves Read from memory (node/storage/index.go). A
-point operation thus pays no Spark job, no Python worker, no query
-planning and no commit protocol. Scans — ``df``, ``list``,
-``find_by_meta``, ``count`` — and ``delete_many``, ``compact`` and
-adoption stay Spark jobs on the ``_live`` view. ``compact()`` folds
-every bucket's partials in ONE Spark write, then swaps each bucket in by
-rename (``swap.py``); opening the store repairs whatever an interrupted
-fold or write left behind. Unlike the
-reference's one file per record, append-only partials plus periodic
-compaction bound file count AND rewrite amplification. The store
-assumes a local POSIX path (listing, rename, the marker file). A
-transactional table format (Delta/Iceberg, gated by
-sources.formats.delta_available) would add MERGE/ACID on top of the
-same layout.
+(``_lookup``: id filter pushed into the pyarrow scan, then ``_net``,
+the netting rule of ``_live`` with Spark's grouping equality), as the
+reference serves Read from memory (node/storage/index.go). A point
+operation thus pays no Spark job, no Python worker, no query planning
+and no commit protocol. Scans — ``df``, ``list``, ``find_by_meta``,
+``count`` — and ``delete_many`` and adoption stay Spark jobs on the
+``_live`` view.
+
+Each bucket is a BASE plus a DELTA, compacted by tiers as Krypton
+(VLDB 2023) keeps a small delta beside an immutable, already merged
+base. The base is the files the bucket's last Spark rewrite wrote,
+named in the bucket's hidden ``_base`` manifest; every other data file
+— driver partials, ``delete_many`` output, adopted flat files, a merged
+delta — is delta, and a bucket with no manifest (never rewritten, or
+written by an older version of the store) is all delta. ``compact()``
+folds each bucket that has a delta. While the delta's bytes are at most
+``DELTA_SHARE`` of the base's, the driver merges the delta alone: the
+bucket is staged as links to its unread base files plus one file of the
+delta netted among itself, so the fold starts no Spark job and writes
+only the delta again. Past that share, or with no base, Spark rewrites
+the bucket into a new base. Both tiers stage under ``_compacted`` and
+swap in by rename (``swap.py``); opening the store repairs whatever an
+interrupted fold or write left behind. Unlike the reference's one file
+per record, append-only partials plus tiered folds bound file count AND
+rewrite amplification. The store assumes a local POSIX path (listing,
+rename, hard links, the marker file). A transactional table format
+(Delta/Iceberg, gated by sources.formats.delta_available) would add
+MERGE/ACID on top of the same layout.
 """
 
 from __future__ import annotations
@@ -119,6 +131,62 @@ _SWAP_LEFTOVER = re.compile(r"(b=-?\d+)\.(old|tmp)-\w+")
 
 NUM_BUCKETS = 16
 
+# A bucket's base files, one name per line, in a manifest that Spark's
+# listing and ``_lookup`` skip (a leading ``_`` hides it).
+_BASE = "_base"
+
+# A fold merges a bucket's delta from the driver while the delta's bytes
+# are at most this share of its base's; past it, Spark rewrites the
+# bucket. At a tenth, a driver merge reads and writes at most a tenth of
+# the bucket's bytes, and a Spark rewrite comes only after that much new
+# data has reached the bucket.
+DELTA_SHARE = 0.1
+
+
+def _data_files(d: str) -> list[str]:
+    """The data files of a bucket dir, by Spark's listing rule: names
+    starting with ``.`` or ``_`` are hidden."""
+    return sorted(f for f in os.listdir(d) if not f.startswith((".", "_")))
+
+
+def _base_names(d: str) -> set[str]:
+    """The names the bucket dir's ``_base`` manifest lists; none without
+    one."""
+    try:
+        with open(os.path.join(d, _BASE)) as fh:
+            return set(fh.read().split())
+    except FileNotFoundError:
+        return set()
+
+
+def _write_base_names(d: str, names) -> None:
+    with open(os.path.join(d, _BASE), "w") as fh:
+        fh.write("".join(f"{n}\n" for n in names))
+
+
+def _bytes(d: str, names) -> int:
+    return sum(os.path.getsize(os.path.join(d, n)) for n in names)
+
+
+def _net(table: pa.Table) -> list[tuple[dict, int]]:
+    """Rows as Spark's grouping in ``_live`` nets them: one ``(row, sum
+    of w)`` per group of equal (id, data, shape, meta), the row being the
+    group's first. Equality is Spark's: -0.0 equals 0.0, every NaN equals
+    every NaN, and meta compares as its sorted entries; a null ``w``
+    counts as +1. Callers choose which sums to keep."""
+    net: dict[tuple, list] = {}
+    for rec in table.to_pylist():
+        data, shape, meta = rec["data"], rec["shape"], rec["meta"]
+        key = (
+            rec["id"],
+            None if data is None else tuple("NaN" if x != x else x for x in data),
+            None if shape is None else tuple(shape),
+            None if meta is None else tuple(sorted(meta)),
+        )
+        entry = net.setdefault(key, [rec, 0])
+        entry[1] += 1 if rec["w"] is None else rec["w"]
+    return [(rec, w) for rec, w in net.values()]
+
 
 class RecordNotFound(KeyError):
     """Read/update/delete of an absent id (≡ 'record not found' RPC error)."""
@@ -143,8 +211,9 @@ class RecordStore:
         long-lived store's reads from degrading unboundedly (every
         write appends at least one partial file; an insert-heavy store
         hits the small-files pathology without any tombstone ever
-        existing, so creates count too). Compaction folds back to one
-        file per bucket and clears the netting marker. The trigger
+        existing, so creates count too). Compaction leaves each bucket
+        its base plus at most one delta file (see :meth:`compact`), and
+        clears the netting marker once no bucket holds a delta. The trigger
         measures the ON-DISK file count, not an in-process counter, so
         it survives reopen. None (default) keeps compaction manual —
         the store is single-writer by contract either way, so the
@@ -262,13 +331,13 @@ class RecordStore:
 
     def _live(self, by_bucket: bool = False) -> DataFrame:
         """The netted live view: sum(w) per full row content, positive
-        sums survive. ``meta`` is a MapType (not groupable), so it rides
-        the aggregate as its canonical sorted entry array and reassembles
-        after. Every content column plus the partition column is a
-        grouping key, so bucket/id predicates push below the aggregate to
-        the scan (the pq_index_rows plan shape — plan-tested). A table
-        with no tombstone marker skips the aggregate: creates append
-        unique live rows, so netting would be the identity. ``by_bucket``
+        sums survive. Spark groups the ``meta`` map by its sorted entries
+        (it sorts each map for the grouping itself). Every content column
+        plus the partition column is a grouping key, so bucket/id
+        predicates push below the aggregate to the scan (the
+        pq_index_rows plan shape — plan-tested). A table with no
+        tombstone marker skips the aggregate: its rows are unique live
+        rows, so netting would be the identity. ``by_bucket``
         hash-partitions the scan by bucket first, which also satisfies
         the aggregate's distribution: one shuffle serves both the netting
         and a per-bucket write."""
@@ -277,26 +346,11 @@ class RecordStore:
             raw = raw.repartition("b")
         if not os.path.isfile(self._marker):
             return raw.drop("w")
-        keyed = raw.select(
-            "id",
-            "data",
-            "shape",
-            # null meta -> null entries -> null map back out; {} round-trips
-            F.array_sort(F.map_entries("meta")).alias("__me"),
-            "b",
-            F.coalesce(F.col("w"), F.lit(1)).alias("w"),
-        )
         return (
-            keyed.groupBy("id", "data", "shape", "__me", "b")
-            .agg(F.sum("w").alias("__w"))
+            raw.groupBy("id", "data", "shape", "meta", "b")
+            .agg(F.sum(F.coalesce(F.col("w"), F.lit(1))).alias("__w"))
             .where(F.col("__w") > 0)
-            .select(
-                "id",
-                "data",
-                "shape",
-                F.map_from_entries(F.col("__me")).alias("meta"),
-                "b",
-            )
+            .drop("__w")
         )
 
     @staticmethod
@@ -347,45 +401,32 @@ class RecordStore:
         job, no Python worker, no query planning — a point lookup costs
         a filtered read of the touched buckets' files, as the reference
         serves Read from its in-memory index (node/storage/index.go).
-        Files are listed by Spark's rules (names starting with ``.`` or
-        ``_`` are hidden), the id filter is pushed into the parquet scan,
-        and files with no ``w`` (adopted) read as +1. Rows then net as
-        ``_live`` nets them — sum(w) per full row content, positive sums
-        survive — under Spark's grouping equality: -0.0 groups with 0.0
-        and every NaN with every NaN. Returns ``{id: Row(id, data, shape,
-        meta)}`` with the stored bits; null shape/meta stay null."""
+        Files are listed by Spark's rules (:func:`_data_files`), the id
+        filter is pushed into the parquet scan, and the rows net by
+        :func:`_net` as ``_live`` nets them: positive sums survive.
+        Returns ``{id: Row(id, data, shape, meta)}`` with the stored
+        bits; null shape/meta stay null."""
         ids = sorted({int(i) for i in ids})
         files = [
             os.path.join(d, f)
             for d in (self._bucket_dir(b) for b in sorted({self._bucket(i) for i in ids}))
             if os.path.isdir(d)
-            for f in sorted(os.listdir(d))
-            if not f.startswith((".", "_"))
+            for f in _data_files(d)
         ]
         if not files:
             return {}
         table = ds.dataset(files, schema=_ARROW_WRITE_SCHEMA, format="parquet").to_table(
             filter=ds.field("id").isin(ids)
         )
-        net: dict[tuple, list] = {}
-        for rec in table.to_pylist():
-            data, shape, meta = rec["data"], rec["shape"], rec["meta"]
-            key = (
-                rec["id"],
-                None if data is None else tuple("NaN" if x != x else x for x in data),
-                None if shape is None else tuple(shape),
-                None if meta is None else tuple(sorted(meta)),
-            )
-            entry = net.setdefault(key, [rec, 0])
-            entry[1] += 1 if rec["w"] is None else rec["w"]
         out: dict[int, Row] = {}
-        for (rid, _, _, meta), (rec, w) in net.items():
-            if w > 0 and rid not in out:
-                out[rid] = Row(
-                    id=rid,
+        for rec, w in _net(table):
+            if w > 0 and rec["id"] not in out:
+                meta = rec["meta"]
+                out[rec["id"]] = Row(
+                    id=rec["id"],
                     data=rec["data"],
                     shape=rec["shape"],
-                    meta=None if meta is None else dict(meta),
+                    meta=None if meta is None else dict(sorted(meta)),
                 )
         return out
 
@@ -464,31 +505,87 @@ class RecordStore:
         """Fire :meth:`compact` when accumulated partial files exceed
         the configured threshold (see __init__). Reads are identical
         before and after by compaction's construction; what changes is
-        file count (one per bucket) and the netting marker (cleared)."""
+        file count (a base plus at most one delta file per bucket) and,
+        once no bucket holds a delta, the netting marker (cleared)."""
         if self.auto_compact_after is None:
             return
         if self._parquet_file_count() > self.num_buckets + self.auto_compact_after:
             self.compact()
 
     def compact(self) -> None:
-        """Fold every bucket's accumulated partials (create-appends and
-        tombstones) into one netted file per bucket — the maintenance
-        job that bounds file count and removes the per-read netting work
-        (the tombstone marker comes off afterwards, so reads return to
-        the pass-through path). ONE Spark write, with a single shuffle
-        by bucket whatever the bucket count, stages the live view for
-        ``swap.commit`` to rename each bucket in. A bucket with no live
-        row left is swapped for an empty directory: were its old partials
-        kept, clearing the marker would serve its deleted rows again.
-        A crash at any point leaves a state that reads the same rows and
-        that ``_recover`` repairs at the next open."""
-        staged = swap.staging(self.path)
-        self._live(by_bucket=True).write.partitionBy("b").parquet(staged)
-        for bucket in self._bucket_dirs():
-            os.makedirs(os.path.join(staged, f"b={bucket}"), exist_ok=True)
-        swap.commit(self.path, drop=[])
-        if os.path.isfile(self._marker):
+        """Fold each bucket's delta (create-appends, tombstones, adopted
+        files, an earlier merged delta) by tiers — the maintenance that
+        bounds file count and write amplification. A bucket whose delta
+        bytes are at most ``DELTA_SHARE`` of its base bytes is merged
+        from the driver (:meth:`_stage_delta_merge`): no Spark job, the
+        base never read; a delta of one file is left as it is, being
+        merged already. Every other bucket with a delta is rewritten by
+        ONE Spark write of the live view, with a single shuffle by bucket
+        whatever the bucket count; its files become the bucket's new
+        base, and a bucket with no live row left is swapped for an empty
+        directory (were its old partials kept, clearing the marker would
+        serve its deleted rows again). Both tiers stage under
+        ``_compacted`` for ``swap.commit`` to rename each bucket in. The
+        tombstone marker comes off once no bucket is left with a delta,
+        so reads return to the pass-through path. A crash at any point
+        leaves a state that reads the same rows and that ``_recover``
+        repairs at the next open."""
+        merge, rewrite, left = {}, [], set()
+        for bucket, d in sorted(self._bucket_dirs().items()):
+            files = _data_files(d)
+            listed = _base_names(d)
+            base = [f for f in files if f in listed]
+            delta = [f for f in files if f not in listed]
+            if not delta:
+                continue
+            if base and _bytes(d, delta) <= DELTA_SHARE * _bytes(d, base):
+                left.add(bucket)
+                if len(delta) > 1:  # one delta file is merged already
+                    merge[bucket] = base, delta
+            else:
+                rewrite.append(bucket)
+        marked = os.path.isfile(self._marker)
+        if merge or rewrite:
+            staged = swap.staging(self.path)
+            if rewrite:
+                self._live(by_bucket=True).where(F.col("b").isin(rewrite)).write.partitionBy(
+                    "b"
+                ).parquet(staged)
+                for bucket in rewrite:
+                    d = os.path.join(staged, f"b={bucket}")
+                    os.makedirs(d, exist_ok=True)
+                    if names := _data_files(d):
+                        _write_base_names(d, names)
+            for bucket, (base, delta) in merge.items():
+                if not self._stage_delta_merge(bucket, staged, base, delta, marked):
+                    left.discard(bucket)
+            swap.commit(self.path, drop=[])
+        if marked and not left:
             os.remove(self._marker)
+
+    def _stage_delta_merge(self, bucket, staged, base, delta, net) -> bool:
+        """Stage bucket ``bucket`` as its base files, hard-linked and not
+        read, plus its delta files merged into one: netted among
+        themselves by :func:`_net` when ``net`` (the marker is set),
+        keeping each group with a nonzero sum of ``w`` and that sum, or
+        else concatenated (no marker: every row is a +1 create). Netting
+        only within the delta keeps every group's total over base plus
+        delta, so the live view is unchanged. Returns whether a delta
+        row is left."""
+        d, out = self._bucket_dir(bucket), os.path.join(staged, f"b={bucket}")
+        os.makedirs(out)
+        for f in base:
+            os.link(os.path.join(d, f), os.path.join(out, f))
+        _write_base_names(out, base)
+        table = ds.dataset(
+            [os.path.join(d, f) for f in delta], schema=_ARROW_WRITE_SCHEMA, format="parquet"
+        ).to_table()
+        if net:
+            rows = [{**rec, "w": w} for rec, w in _net(table) if w != 0]
+            table = pa.Table.from_pylist(rows, schema=_ARROW_WRITE_SCHEMA)
+        if table.num_rows:
+            pq.write_table(table, os.path.join(out, f"part-{uuid.uuid4().hex}.parquet"))
+        return table.num_rows > 0
 
     def list(self, page: int = 1, per_page: int = 10) -> tuple[int, list[Row]]:
         """Ordered pagination returning (total, rows)

@@ -741,3 +741,163 @@ def test_point_ops_start_no_spark_job(spark, tmp_path):
     assert {r["id"]: r["data"] for r in store.df.collect()} == {
         1: [0.0], 2: [9.0], 3: [3.0], 4: [3.0], 7: [7.0], 8: [8.0]
     }
+
+
+def _jobs(spark, tag, fn) -> int:
+    """The Spark jobs ``fn`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+def test_tiered_fold_random_ops_match_dict_model(spark, tmp_path, seed):
+    """Both fold tiers serve the same rows. On a base of wide vectors
+    plus adopted rows with awkward floats (NaN, -0.0, overflow to inf,
+    subnormal), null meta and null shape, a random sequence of point
+    writes, delete_many, folds, bulk creates of wide rows (which push a
+    bucket's delta past its share of the base, so the next fold
+    rewrites it on Spark) and reopens must leave, after every step,
+    ``df`` equal to a dict model and ``read(id)`` equal to the id's row
+    in ``_live()``. A fold starts a Spark job exactly when it rewrites a
+    base, both tiers run, and the netting marker is off exactly when no
+    bucket holds a delta."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from sum_spark import store as store_mod
+
+    floats = [0.1, 1 / 3, 1e39, float("nan"), -0.0, 1e-40]
+    cast = (
+        spark.createDataFrame([(floats,)], "x array<double>")
+        .select(F.col("x").cast("array<float>").alias("x"))
+        .first()["x"]
+    )
+    rng = np.random.default_rng(seed)
+
+    def wide():
+        return rng.standard_normal(1024).astype(np.float32).tolist()
+
+    model: dict[int, tuple] = {i: (wide(), [1024], {"src": "flat"}) for i in range(1, 81)}
+    model[81] = (cast, None, {"src": "flat"})
+    model[82] = ([cast[3]], [1], None)
+    model[83] = ([], None, None)
+    model[84] = ([cast[4], 1.0], [2], {})
+    path = str(tmp_path / "records")
+    os.makedirs(path)
+    ids = sorted(model)
+    pq.write_table(
+        pa.table(
+            {
+                "id": pa.array(ids, pa.int64()),
+                "data": pa.array([model[i][0] for i in ids], pa.list_(pa.float32())),
+                "shape": pa.array([model[i][1] for i in ids], pa.list_(pa.int64())),
+                "meta": pa.array(
+                    [None if model[i][2] is None else list(model[i][2].items()) for i in ids],
+                    pa.map_(pa.string(), pa.string()),
+                ),
+            }
+        ),
+        os.path.join(path, "flat.parquet"),
+    )
+    store = RecordStore(spark, path, num_buckets=2)
+    store.compact()  # the adopted rows become each bucket's base
+    used = set(model)
+
+    def data():
+        return [cast[i] for i in rng.integers(0, len(cast), int(rng.integers(0, 4)))]
+
+    def pick(pool):
+        return int(rng.choice(sorted(pool)))
+
+    def layout():
+        """Per bucket: (base names, delta names)."""
+        out = {}
+        for bucket, d in store._bucket_dirs().items():
+            names = store_mod._base_names(d)
+            out[bucket] = (names, set(store_mod._data_files(d)) - names)
+        return out
+
+    def check():
+        want = {rid: _canon({"id": rid, "data": d, "shape": s, "meta": m})
+                for rid, (d, s, m) in model.items()}
+        assert {r["id"]: _canon(r) for r in store.df.collect()} == want
+        live = {
+            r["id"]: r
+            for r in store._live().where(F.col("id").isin(sorted(used))).drop("b").collect()
+        }
+        for rid in sorted(used):
+            try:
+                got = store.read(rid)
+            except RecordNotFound:
+                got = None
+            assert _canon(got) == _canon(live.get(rid)), rid
+
+    tiers = []
+    check()
+    for step in range(24):
+        op = rng.choice(
+            ["create", "create_id", "update", "delete", "delete_many", "grow", "compact",
+             "reopen"],
+            p=[0.14, 0.1, 0.18, 0.08, 0.06, 0.06, 0.3, 0.08],
+        )
+        if op == "create":
+            d = data()
+            rid = store.create(d, meta={"s": str(step)})
+            model[rid] = (d, [len(d)], {"s": str(step)})
+            used.add(rid)
+        elif op == "create_id":
+            rid = pick(used | {100, 101, 102})
+            used.add(rid)
+            if rid in model:
+                with pytest.raises(IdCollision):
+                    store.create_with_id(rid, data())
+            else:
+                d = data()
+                store.create_with_id(rid, d, meta={"c": str(step)})
+                model[rid] = (d, [len(d)], {"c": str(step)})
+        elif op == "update" and model:
+            rid = pick(model)
+            d = data() if rng.random() < 0.5 else None
+            m = {"u": str(step)} if rng.random() < 0.5 else None
+            store.update(rid, data=d, meta=m)
+            old_d, old_s, old_m = model[rid]
+            d = old_d if d is None else d
+            model[rid] = (d, old_s or [len(d)], (old_m or {}) if m is None else m)
+        elif op == "delete" and model:
+            rid = pick(model)
+            store.delete(rid)
+            del model[rid]
+        elif op == "delete_many":
+            rids = [int(i) for i in rng.choice(sorted(used), 2)]
+            store.delete_many(rids)
+            for rid in rids:
+                model.pop(rid, None)
+        elif op == "grow":
+            rows = {max(used) + 1 + i: wide() for i in range(8)}
+            store.create_many_with_id(rows)
+            model.update({rid: (d, [1024], {}) for rid, d in rows.items()})
+            used.update(rows)
+        elif op == "compact":
+            marked, before = os.path.isfile(store._marker), layout()
+            jobs = _jobs(spark, f"tiered-fold-{seed}-{step}", store.compact)
+            after = layout()
+            rewrote = any(after[b][0] != names for b, (names, _) in before.items())
+            assert (jobs > 0) == rewrote, (jobs, before, after)
+            if before != after:
+                tiers.append(rewrote)
+            delta_left = any(delta for _, delta in after.values())
+            assert os.path.isfile(store._marker) == (marked and delta_left)
+        elif op == "reopen":
+            store = RecordStore(spark, path, num_buckets=2)
+        check()
+    assert True in tiers and False in tiers, tiers

@@ -1,7 +1,9 @@
 """The staged swap (sum_spark/swap.py) under every caller.
 
-For each caller — RecordStore.compact, compact_pq_index,
-compact_ivf_index, retrain_pq_index and compact_inverted_index — one
+For each caller — RecordStore.compact (a Spark rewrite of every bucket,
+and a driver merge of each bucket's delta beside its linked base),
+compact_pq_index, compact_ivf_index, retrain_pq_index and
+compact_inverted_index — one
 uninterrupted compaction counts its ``os.rename``, ``shutil.rmtree`` and
 ``os.remove`` calls; then the compaction is crashed at each of those
 calls in turn, recovered (the store by reopening, an index by re-running
@@ -21,6 +23,7 @@ from conftest import _Crash, _crash_on
 
 import sum_spark.operators.search as II
 import sum_spark.operators.similarity as S
+import sum_spark.store as store_mod
 from sum_spark import swap
 from sum_spark.store import RecordStore
 
@@ -61,6 +64,54 @@ def _store_read(spark, path):
     store = RecordStore(spark, path, num_buckets=2)
     rows = _sorted_rows(store.df)
     return rows, [repr(store.read(i)) for i in (1, 2, 5, 6)]
+
+
+def _store_delta_build(spark, path):
+    """A base of wide vectors from a first fold, then small writes in
+    both buckets: each bucket's delta (two files of a few KB) stays under
+    a tenth of its base (20 rows of 1024 floats), so the next fold
+    merges the deltas from the driver."""
+    rng = np.random.default_rng(9)
+    store = RecordStore(spark, path, num_buckets=2)
+    store.create_many_with_id({i: rng.standard_normal(1024).tolist() for i in range(1, 41)})
+    store.create_many_with_id({41: [1.0], 42: [2.0], 43: [3.0], 44: [4.0]})
+    store.compact()
+    store.update(42, data=[-0.0, float("nan")])
+    store.delete(44)
+    store.create([5.0], meta={"k": "new"})
+    store.update(43, meta={"k": "u"})
+
+
+def _store_delta_read(spark, path):
+    store = RecordStore(spark, path, num_buckets=2)
+    rows = _sorted_rows(store.df)
+    return rows, [repr(store.read(i)) for i in (1, 2, 42, 43, 45)]
+
+
+def _base_inodes(path) -> dict:
+    out = {}
+    for bucket in ("b=0", "b=1"):
+        d = os.path.join(path, bucket)
+        with open(os.path.join(d, store_mod._BASE)) as fh:
+            for name in fh.read().split():
+                out[bucket, name] = os.stat(os.path.join(d, name)).st_ino
+    return out
+
+
+def test_store_delta_merge_links_the_base(spark, tmp_path):
+    """The delta merge leaves each bucket its base files, the same
+    inodes, plus one merged delta file, and keeps the netting marker,
+    since a delta is left."""
+    path = str(tmp_path / "store")
+    _store_delta_build(spark, path)
+    before = _base_inodes(path)
+    assert before
+    _store_compact(spark, path)
+    assert _base_inodes(path) == before
+    for bucket in ("b=0", "b=1"):
+        files = store_mod._data_files(os.path.join(path, bucket))
+        assert len(files) == 1 + sum(1 for b, _ in before if b == bucket)
+    assert os.path.isfile(os.path.join(path, "_tombstones"))
 
 
 def _pq_build(spark, path):
@@ -141,6 +192,7 @@ def _ii_read(spark, path):
 
 _CASES = {
     "store": (_store_build, _store_compact, _store_recover, _store_read),
+    "store_delta": (_store_delta_build, _store_compact, _store_recover, _store_delta_read),
     "pq": (
         _pq_build,
         lambda spark, p: S.compact_pq_index(spark, p),
