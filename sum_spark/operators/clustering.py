@@ -32,8 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sum_spark.functions.hashing import hash60
-from sum_spark.operators.embeddings import mean_pool
+from sum_spark.functions.hashing import hash60_sql
+from sum_spark.functions.litsql import qid
+from sum_spark.operators.embeddings import mean_pool, sq_dist_structs_sql
 
 
 def hash_init_assign(
@@ -50,7 +51,8 @@ def hash_init_assign(
     cross-engine RNG story).
     """
     return df.withColumn(
-        cluster_col, hash60(F.col(id_col).cast("string")) % F.lit(int(k))
+        cluster_col,
+        F.expr(f"{hash60_sql(f'CAST({qid(id_col)} AS STRING)')} % {int(k)}"),
     )
 
 
@@ -64,8 +66,12 @@ def centroid_sums(
     (group, n_vecs, pooled_fp) — element-wise integer sums in 10^-fp
     units per cluster. Integer, hence bit-reproducible on any layout and
     engine; divide by n_vecs * 10^fp to materialize the centroid.
+
+    Unordered: every caller collects it into a dict or unions it under a
+    global sort, and a sort here costs the collect a range-sampling job
+    and a stage.
     """
-    return mean_pool(df, cluster_col, vec_col, fixed_point=fixed_point)
+    return mean_pool(df, cluster_col, vec_col, fixed_point=fixed_point, ordered=False)
 
 
 def _centroids_from_sums(rows, fixed_point: int) -> dict[int, list[float]]:
@@ -100,35 +106,10 @@ def assign_clusters(
     if not items:
         raise ValueError("assign_clusters needs at least one centroid")
     if backend == "catalyst":
-        from sum_spark.functions.litsql import darray
-
-        # one expr string == the same literal nodes at ~1/100th the py4j
-        # round trips (functions/litsql.py; exactness unit-pinned)
-        cent_lit = F.expr(
-            "array("
-            + ", ".join(
-                f"struct({darray(c)} AS c, CAST({int(j)} AS BIGINT) AS j)"
-                for j, c in items
-            )
-            + ")"
+        vec = f"CAST({qid(vec_col)} AS ARRAY<DOUBLE>)"
+        return df.withColumn(
+            cluster_col, F.expr(f"array_min({sq_dist_structs_sql(items, vec)}).j")
         )
-        v = F.col(vec_col).cast("array<double>")
-        # array_min over (dist, j) structs = lexicographic argmin with the
-        # tie broken by the lower cluster id, all inside one expression.
-        best = F.array_min(
-            F.transform(
-                cent_lit,
-                lambda s: F.struct(
-                    F.aggregate(
-                        F.zip_with(v, s["c"], lambda x, c: (x - c) * (x - c)),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ).alias("d"),
-                    s["j"].alias("j"),
-                ),
-            )
-        )
-        return df.withColumn(cluster_col, best["j"])
 
     import numpy as np
     import pandas as pd
@@ -221,38 +202,15 @@ def assign_clusters_topp(
     p = min(int(probes), len(items))
 
     if backend == "catalyst":
-        from sum_spark.functions.litsql import darray
-
-        cent_lit = F.expr(
-            "array("
-            + ", ".join(
-                f"struct({darray(c)} AS c, CAST({int(j)} AS BIGINT) AS j)"
-                for j, c in items
-            )
-            + ")"
-        )
-        v = F.col(vec_col).cast("array<double>")
-        # array_sort on (d, j) structs = lexicographic (distance, id)
-        # order; slice keeps the p nearest. Same fold as assign_clusters.
-        ranked = F.slice(
-            F.array_sort(
-                F.transform(
-                    cent_lit,
-                    lambda s: F.struct(
-                        F.aggregate(
-                            F.zip_with(v, s["c"], lambda x, c: (x - c) * (x - c)),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        ).alias("d"),
-                        s["j"].alias("j"),
-                    ),
-                )
-            ),
-            1,
-            p,
-        )
+        # sorting the (d, j) structs = lexicographic (distance, id) order;
+        # slice keeps the p nearest. Same fold as assign_clusters.
+        vec = f"CAST({qid(vec_col)} AS ARRAY<DOUBLE>)"
         probed = df.withColumn(
-            "__cls", F.transform(ranked, lambda s: s["j"])
+            "__cls",
+            F.expr(
+                f"transform(slice(array_sort({sq_dist_structs_sql(items, vec)}),"
+                f" 1, {p}), __s -> __s.j)"
+            ),
         )
         return probed.withColumn(cluster_col, F.explode("__cls")).drop("__cls")
 

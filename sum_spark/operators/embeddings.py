@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sum_spark.functions.litsql import darray, dlit, qid
 from sum_spark.plans.scale import spread_for_compute
 
 
@@ -34,35 +35,35 @@ def quantize_int8(
     max(|v_i - q_i * scale|) <= scale/2.
     """
     df = spread_for_compute(df)
-    staged = df.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-    )
-    # amax staged on its own; it is referenced by the quant lambda per
+    # amax is staged on its own; it is referenced by the quant lambda per
     # element, and Catalyst re-inlining an aggregate-over-array there
     # would be O(d^2) per row — acceptable at d=64, but the projection
     # boundary keeps the plan readable and the exprs shallow.
-    a = staged.select(
-        "vec_id",
-        "__v",
-        F.array_max(F.transform("__v", lambda x: F.abs(x))).alias("__amax"),
+    return (
+        df.selectExpr(
+            f"{qid(id_col)} AS vec_id",
+            f"CAST({qid(vec_col)} AS ARRAY<DOUBLE>) AS __v",
+        )
+        .selectExpr(
+            "vec_id", "__v", "array_max(transform(__v, x -> abs(x))) AS __amax"
+        )
+        .selectExpr(
+            "vec_id",
+            "__v",
+            "__amax",
+            "CASE WHEN __amax > 0"
+            " THEN transform(__v, x -> CAST(floor(x * 127 / __amax + 0.5D) AS INT))"
+            " ELSE transform(__v, x -> 0) END AS __q",
+        )
+        .selectExpr(
+            "vec_id",
+            "__amax / 127 AS scale",
+            "array_join(transform(__q, x -> CAST(x AS STRING)), ',') AS q_str",
+            "array_max(zip_with(__v, __q, (x, qq) -> abs(x - qq * (__amax / 127))))"
+            " AS max_abs_err",
+        )
+        .transform(lambda d: d.orderBy("vec_id") if ordered else d)
     )
-    amax = F.col("__amax")
-    q = F.when(
-        amax > 0,
-        F.transform("__v", lambda x: F.floor(x * 127 / amax + F.lit(0.5)).cast("int")),
-    ).otherwise(F.transform("__v", lambda x: F.lit(0)))
-    b = a.select("vec_id", "__v", "__amax", q.alias("__q"))
-    scale = amax / 127
-    err = F.array_max(
-        F.zip_with("__v", "__q", lambda x, qq: F.abs(x - qq * (amax / 127)))
-    )
-    return b.select(
-        "vec_id",
-        scale.alias("scale"),
-        F.array_join(F.transform("__q", lambda x: x.cast("string")), ",").alias("q_str"),
-        err.alias("max_abs_err"),
-    ).transform(lambda d: d.orderBy("vec_id") if ordered else d)
 
 
 def l2_normalize(
@@ -82,22 +83,25 @@ def l2_normalize(
 
     Output: (vec_id, norm, unit: array<double>) ordered.
     """
-    staged = df.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-    )
-    n = F.sqrt(
-        F.aggregate(
-            F.transform("__v", lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
+    return (
+        df.selectExpr(
+            f"{qid(id_col)} AS vec_id",
+            f"CAST({qid(vec_col)} AS ARRAY<DOUBLE>) AS __v",
         )
+        .selectExpr(
+            "vec_id",
+            "__v",
+            "sqrt(aggregate(transform(__v, x -> x * x), 0.0D, (acc, x) -> acc + x))"
+            " AS __n",
+        )
+        .selectExpr(
+            "vec_id",
+            "__n AS norm",
+            "CASE WHEN __n > 0 THEN transform(__v, x -> x / __n)"
+            " ELSE transform(__v, x -> 0.0D) END AS unit",
+        )
+        .transform(lambda d: d.orderBy("vec_id") if ordered else d)
     )
-    a = staged.select("vec_id", "__v", n.alias("__n"))
-    unit = F.when(
-        F.col("__n") > 0, F.transform("__v", lambda x: x / F.col("__n"))
-    ).otherwise(F.transform("__v", lambda x: F.lit(0.0)))
-    return a.select(
-        "vec_id", F.col("__n").alias("norm"), unit.alias("unit")
-    ).transform(lambda d: d.orderBy("vec_id") if ordered else d)
 
 
 def random_project(
@@ -129,8 +133,6 @@ def random_project(
     dims = int(staged.select(F.size("__v")).limit(1).collect()[0][0])
     planes = srp_planes(int(out_dims), dims, seed=seed)
     scale = 1.0 / float(out_dims) ** 0.5
-
-    from sum_spark.functions.litsql import darray, dlit
 
     # The out_dims x dims plane literals render into ONE F.expr string
     # (litsql / VERDICT r12 #6) instead of out_dims*dims F.lit py4j
@@ -173,29 +175,25 @@ def mean_pool(
     in 10^-k units (divide by n_vecs downstream; the division is left to
     the consumer so the stored artifact stays integer-exact).
     """
-    ex = df.select(
-        F.col(group_col).alias("group"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "val"),
+    ex = df.selectExpr(
+        f"{qid(group_col)} AS `group`",
+        f"posexplode(CAST({qid(vec_col)} AS ARRAY<DOUBLE>)) AS (pos, val)",
     )
-    if fixed_point is not None:
-        unit = 10**fixed_point
-        v = F.floor(F.col("val") * unit + F.lit(0.5)).cast("long")
-        per = ex.groupBy("group", "pos").agg(
-            F.sum(v).alias("m"), F.count("*").alias("c")
-        )
+    if fixed_point is None:
+        m, out_col = "avg(val)", "pooled"
     else:
-        per = ex.groupBy("group", "pos").agg(
-            F.avg("val").alias("m"), F.count("*").alias("c")
-        )
-    out_col = "pooled_fp" if fixed_point is not None else "pooled"
+        m = f"sum(CAST(floor(val * {10**fixed_point} + 0.5D) AS BIGINT))"
+        out_col = "pooled_fp"
     return (
-        per.groupBy("group")
+        ex.groupBy("group", "pos")
+        .agg(F.expr(f"{m} AS m"), F.expr("count(*) AS c"))
+        .groupBy("group")
         .agg(
-            F.max("c").alias("n_vecs"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias(out_col),
+            F.expr("max(c) AS n_vecs"),
+            F.expr(
+                f"transform(array_sort(collect_list(struct(pos, m))), s -> s.m)"
+                f" AS {out_col}"
+            ),
         )
         .transform(lambda d: d.orderBy("group") if ordered else d)
     )
@@ -276,63 +274,62 @@ def product_quantize(
     if backend == "numpy":
         _pq_check_dims(items, m)
         return _pq_codes_numpy(df, m, items, id_col, vec_col), cents
-    codes = df.select(
-        F.col(id_col).alias("vec_id"),
-        F.array(*pq_code_cols(items, m, vec_col)).alias("codes"),
+    codes = df.selectExpr(
+        f"{qid(id_col)} AS vec_id", f"{pq_codes_sql(items, m, vec_col)} AS codes"
     ).transform(lambda d: d.orderBy("vec_id") if ordered else d)
     return codes, cents
 
 
 def _pq_check_dims(items: list, m: int) -> int:
+    if not items:
+        raise ValueError("product quantization needs at least one centroid")
     d = len(items[0][1])
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
     return d
 
 
-def pq_code_cols(items: list, m: int, vec_col: str) -> list:
-    """The ``m`` catalyst PQ-code Columns over ``vec_col`` for a sorted
-    (cluster, centroid) item list — product_quantize's assignment
-    expressions factored out so an index build can attach codes in the
-    SAME projection that carries the coarse id: the previous
-    write/maintain shape re-derived codes in a second frame and JOINED
-    it back on id (one shuffle join + its exchanges per build/append/
-    retire, guide §2.4 — removed)."""
+def sq_dist_structs_sql(items: list, vec_sql: str) -> str:
+    """SQL text of an array<struct<d: double, j: bigint>>: the squared L2
+    distance from ``vec_sql`` (an array<double> expression) to each
+    centroid of a sorted (id, centroid) item list. Each distance is a
+    strictly left-to-right fold, which DuckDB's list_sum reproduces bit
+    for bit, and array_min over the structs is the lexicographic
+    (distance, id) argmin: ties go to the lowest id. The centroids are
+    exact literals (functions/litsql.py); the lambda variables carry a
+    ``__`` prefix so they cannot shadow a caller's column."""
+    cents = ", ".join(
+        f"struct({darray(c)} AS c, CAST({int(j)} AS BIGINT) AS j)" for j, c in items
+    )
+    return (
+        f"transform(array({cents}), __s -> struct(aggregate(zip_with({vec_sql},"
+        " __s.c, (__x, __c) -> (__x - __c) * (__x - __c)), 0.0D,"
+        " (__acc, __x) -> __acc + __x) AS d, __s.j AS j))"
+    )
+
+
+def pq_codes_sql(items: list, m: int, vec_col: str) -> str:
+    """SQL text of the ``array<bigint>`` of ``m`` catalyst PQ codes over
+    ``vec_col`` for a sorted (cluster, centroid) item list, one
+    :func:`sq_dist_structs_sql` argmin per subspace book.
+    product_quantize's assignment, factored out so an index build can
+    attach codes in the SAME projection that carries the coarse id: the
+    previous write/maintain shape re-derived codes in a second frame and
+    JOINED it back on id (one shuffle join + its exchanges per
+    build/append/retire, guide §2.4 — removed)."""
     d = _pq_check_dims(items, m)
     sd = d // m
-    v = F.col(vec_col).cast("array<double>")
-    from sum_spark.functions.litsql import darray
-
-    code_cols = []
-    for j in range(m):
-        sub = F.slice(v, j * sd + 1, sd)
-        # one expr string per subspace book (functions/litsql.py): the
-        # k x sd literal structs cost ~1 py4j call instead of ~k x sd
-        cent_lit = F.expr(
-            "array("
-            + ", ".join(
-                f"struct({darray(c[j * sd : (j + 1) * sd])} AS c,"
-                f" CAST({int(cid)} AS BIGINT) AS j)"
-                for cid, c in items
-            )
-            + ")"
+    v = f"CAST({qid(vec_col)} AS ARRAY<DOUBLE>)"
+    codes = (
+        "array_min("
+        + sq_dist_structs_sql(
+            [(cid, c[j * sd : (j + 1) * sd]) for cid, c in items],
+            f"slice({v}, {j * sd + 1}, {sd})",
         )
-        # Factory closure, NOT a default arg: PySpark introspects HOF
-        # lambda arity, and `lambda s, sub=sub:` would be called as the
-        # two-arg (element, index) form with `sub` bound to the index.
-        def _dist_struct(sub_expr):
-            return lambda s: F.struct(
-                F.aggregate(
-                    F.zip_with(sub_expr, s["c"], lambda x, c: (x - c) * (x - c)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                s["j"].alias("j"),
-            )
-
-        best = F.array_min(F.transform(cent_lit, _dist_struct(sub)))
-        code_cols.append(best["j"])
-    return code_cols
+        + ").j"
+        for j in range(m)
+    )
+    return "array(" + ", ".join(codes) + ")"
 
 
 def _pq_codes_numpy(

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from sum_spark.functions.litsql import qid
 from sum_spark.functions.vector import cosine, dot, magnitude, vec_get
 
 
@@ -693,7 +694,7 @@ def knn_ivfpq(
         centroid_sums,
         hash_init_assign,
     )
-    from sum_spark.operators.embeddings import product_quantize
+    from sum_spark.operators.embeddings import _pq_check_dims, product_quantize
 
     if centroids is None:
         init = hash_init_assign(records, n_codes, id_col)
@@ -701,10 +702,7 @@ def knn_ivfpq(
             centroid_sums(init, "cluster", vec_col, 6).collect(), 6
         )
     items = sorted(centroids.items())
-    d = len(items[0][1])
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sd = d // m
+    sd = _pq_check_dims(items, m) // m
 
     # Corpus index: (id, coarse cluster, m codes) — what a 100 TB
     # deployment stores (write with partitionBy(coarse) for pruning).
@@ -979,7 +977,7 @@ def write_pq_index(
     large = len(centroids) > _LARGE_K
     spark = records.sparkSession
     if residual:
-        from sum_spark.operators.embeddings import _pq_codes_numpy, pq_code_cols
+        from sum_spark.operators.embeddings import _pq_codes_numpy, pq_codes_sql
 
         # persisted: the residual frame feeds the seed collect, every
         # Lloyd iteration, and the encode+write — a full-corpus
@@ -1005,12 +1003,10 @@ def write_pq_index(
                     carry_coarse=True,
                 ).select(F.col("vec_id").alias(id_col), "coarse", "codes")
             else:
-                rows = res.select(
-                    F.col(id_col),
+                rows = res.selectExpr(
+                    qid(id_col),
                     "coarse",
-                    F.array(
-                        *pq_code_cols(sorted(res_book.items()), m, "__res")
-                    ).alias("codes"),
+                    f"{pq_codes_sql(sorted(res_book.items()), m, '__res')} AS codes",
                 )
             rows.withColumn("w", F.lit(1)).write.partitionBy("coarse").parquet(
                 path, mode="overwrite"
@@ -1749,7 +1745,7 @@ def _pq_rows(
     build and maintenance so stored rows stay bit-identical across both
     (the deletion-as-negation contract)."""
     from sum_spark.operators.clustering import assign_clusters
-    from sum_spark.operators.embeddings import _pq_codes_numpy, pq_code_cols
+    from sum_spark.operators.embeddings import _pq_codes_numpy, pq_codes_sql
 
     large = len(book) > _LARGE_K
     # The numpy encode paths emit the id as BIGINT; cast back to the
@@ -1769,12 +1765,10 @@ def _pq_rows(
                 res, m, sorted(res_book.items()), id_col, "__res",
                 carry_coarse=True,
             ).select(F.col("vec_id").cast(id_type).alias(id_col), "coarse", "codes")
-        return res.select(
-            F.col(id_col),
+        return res.selectExpr(
+            qid(id_col),
             "coarse",
-            F.array(*pq_code_cols(sorted(res_book.items()), m, "__res")).alias(
-                "codes"
-            ),
+            f"{pq_codes_sql(sorted(res_book.items()), m, '__res')} AS codes",
         )
     items = sorted(book.items())
     if large:
@@ -1784,10 +1778,8 @@ def _pq_rows(
         records, book, id_col, vec_col, cluster_col="coarse",
         backend="catalyst",
     )
-    return coarse.select(
-        F.col(id_col),
-        "coarse",
-        F.array(*pq_code_cols(items, m, vec_col)).alias("codes"),
+    return coarse.selectExpr(
+        qid(id_col), "coarse", f"{pq_codes_sql(items, m, vec_col)} AS codes"
     )
 
 
@@ -2069,7 +2061,7 @@ def retrain_pq_index(
     import os
 
     from sum_spark import swap
-    from sum_spark.operators.embeddings import _pq_codes_numpy, pq_code_cols
+    from sum_spark.operators.embeddings import _pq_codes_numpy, pq_codes_sql
     from sum_spark.operators.search import _batch_fold_plan
 
     staged = swap.staging(path)
@@ -2136,12 +2128,10 @@ def retrain_pq_index(
                 carry_coarse=True,
             ).select(F.col("vec_id").alias(id_col), "coarse", "codes")
         else:
-            rows = res.select(
-                F.col(id_col),
+            rows = res.selectExpr(
+                qid(id_col),
                 "coarse",
-                F.array(
-                    *pq_code_cols(sorted(res_book.items()), m, "__res")
-                ).alias("codes"),
+                f"{pq_codes_sql(sorted(res_book.items()), m, '__res')} AS codes",
             )
     else:
         rows = _pq_rows(survivors, book, None, m, id_col, vec_col)

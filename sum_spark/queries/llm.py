@@ -1757,38 +1757,32 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    quant = embeddings.quantize_int8(emb, ordered=False).select(
-        F.lit("quant").alias("mode"),
-        "vec_id",
-        "scale",
-        "q_str",
-        "max_abs_err",
-        F.lit(None).cast("long").alias("n_vecs"),
+    # Leg projections are SQL text: construct cost is py4j round trips,
+    # and a selectExpr costs a few where Column lambdas cost dozens.
+    no_scale = "CAST(NULL AS DOUBLE) AS scale"
+    no_err = "CAST(NULL AS DOUBLE) AS max_abs_err"
+    no_n = "CAST(NULL AS BIGINT) AS n_vecs"
+    fp_str = "array_join(transform(pooled_fp, m -> CAST(m AS STRING)), ',') AS q_str"
+    quant = embeddings.quantize_int8(emb, ordered=False).selectExpr(
+        "'quant' AS mode", "vec_id", "scale", "q_str", "max_abs_err", no_n
     )
-    norm = embeddings.l2_normalize(emb, ordered=False).select(
-        F.lit("norm").alias("mode"),
+    norm = embeddings.l2_normalize(emb, ordered=False).selectExpr(
+        "'norm' AS mode",
         "vec_id",
-        F.round("norm", 4).alias("scale"),
-        F.array_join(
-            F.transform(
-                "unit",
-                lambda u: F.floor(u * 10000 + F.lit(0.5)).cast("long").cast("string"),
-            ),
-            ",",
-        ).alias("q_str"),
-        F.lit(None).cast("double").alias("max_abs_err"),
-        F.lit(None).cast("long").alias("n_vecs"),
+        "round(norm, 4) AS scale",
+        "array_join(transform(unit,"
+        " u -> CAST(CAST(floor(u * 10000 + 0.5D) AS BIGINT) AS STRING)), ',') AS q_str",
+        no_err,
+        no_n,
     )
     pool = embeddings.mean_pool(
         emb, "label", "embedding", fixed_point=6, ordered=False
-    ).select(
-        F.lit("pool").alias("mode"),
-        F.col("group").cast("long").alias("vec_id"),
-        F.lit(None).cast("double").alias("scale"),
-        F.array_join(
-            F.transform("pooled_fp", lambda m: m.cast("string")), ","
-        ).alias("q_str"),
-        F.lit(None).cast("double").alias("max_abs_err"),
+    ).selectExpr(
+        "'pool' AS mode",
+        "CAST(`group` AS BIGINT) AS vec_id",
+        no_scale,
+        fp_str,
+        no_err,
         "n_vecs",
     )
     k = 8
@@ -1798,25 +1792,18 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         6,
     )
     assigned = clustering.assign_clusters(emb, cents0, backend="catalyst")
-    kmeans = assigned.select(
-        F.lit("kmeans").alias("mode"),
+    kmeans = assigned.selectExpr(
+        "'kmeans' AS mode",
         "vec_id",
-        F.lit(None).cast("double").alias("scale"),
-        F.lit(None).cast("string").alias("q_str"),
-        F.lit(None).cast("double").alias("max_abs_err"),
-        F.col("cluster").alias("n_vecs"),
+        no_scale,
+        "CAST(NULL AS STRING) AS q_str",
+        no_err,
+        "cluster AS n_vecs",
     )
     kcent = clustering.centroid_sums(
         assigned, "cluster", "embedding", fixed_point=6
-    ).select(
-        F.lit("kcent").alias("mode"),
-        F.col("group").alias("vec_id"),
-        F.lit(None).cast("double").alias("scale"),
-        F.array_join(F.transform("pooled_fp", lambda m: m.cast("string")), ",").alias(
-            "q_str"
-        ),
-        F.lit(None).cast("double").alias("max_abs_err"),
-        "n_vecs",
+    ).selectExpr(
+        "'kcent' AS mode", "`group` AS vec_id", no_scale, fp_str, no_err, "n_vecs"
     )
     # cents0 IS the one-step book product_quantize would train (same
     # hash-init, same fixed-point aggregate): pass it instead of letting
@@ -1825,15 +1812,13 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq_codes, _pq_book = embeddings.product_quantize(
         emb, m=2, k=k, centroids=cents0, ordered=False
     )
-    pq = pq_codes.select(
-        F.lit("pq").alias("mode"),
+    pq = pq_codes.selectExpr(
+        "'pq' AS mode",
         "vec_id",
-        F.lit(None).cast("double").alias("scale"),
-        F.array_join(
-            F.transform("codes", lambda c: c.cast("string")), ","
-        ).alias("q_str"),
-        F.lit(None).cast("double").alias("max_abs_err"),
-        F.lit(None).cast("long").alias("n_vecs"),
+        no_scale,
+        "array_join(transform(codes, c -> CAST(c AS STRING)), ',') AS q_str",
+        no_err,
+        no_n,
     )
     return (
         quant.unionByName(norm)

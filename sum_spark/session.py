@@ -21,6 +21,13 @@ _BASE_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # On by default, this wraps every Column and DataFrame call in a
+    # call-site capture that costs about 5 extra py4j round trips (active
+    # session, JVM class lookup, conf read, origin set and clear), which
+    # is most of a query's construct time. The cost of turning it off:
+    # analysis errors no longer name the Python file:line that built the
+    # failing expression.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # files.maxPartitionBytes default 128m is right for the 100 TB posture;
     # left untouched so parquet splits stay aligned with row groups.
 }

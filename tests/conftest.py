@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -85,3 +86,36 @@ def _crash_on(monkeypatch, module, name, nth):
         return real(*args, **kwargs)
 
     monkeypatch.setattr(module, name, wrapper)
+
+
+@contextlib.contextmanager
+def py4j_calls():
+    """Count the py4j round trips made inside the block: every gateway
+    ``send_command``, the unit a plan build pays per Column or DataFrame
+    call. Yields a one-element list holding the running count."""
+    from py4j.clientserver import ClientServerConnection
+
+    count = [0]
+    real = ClientServerConnection.send_command
+
+    def counting(self, command):
+        count[0] += 1
+        return real(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield count
+    finally:
+        ClientServerConnection.send_command = real
+
+
+def spark_jobs(spark, tag, fn) -> int:
+    """The Spark jobs ``fn`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    return len(sc.statusTracker().getJobIdsForGroup(tag))

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import _Crash, _crash_on
+from conftest import _Crash, _crash_on, spark_jobs as _jobs
 from sum_spark.store import IdCollision, RecordNotFound, RecordStore
 
 
@@ -741,18 +741,6 @@ def test_point_ops_start_no_spark_job(spark, tmp_path):
     assert {r["id"]: r["data"] for r in store.df.collect()} == {
         1: [0.0], 2: [9.0], 3: [3.0], 4: [3.0], 7: [7.0], 8: [8.0]
     }
-
-
-def _jobs(spark, tag, fn) -> int:
-    """The Spark jobs ``fn`` starts, counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
-    return len(sc.statusTracker().getJobIdsForGroup(tag))
 
 
 @pytest.mark.parametrize("seed", [3, 17])
