@@ -137,9 +137,10 @@ def assign_clusters(
 
 def _batched_sq_dists(vec, cmat):
     """(len(vec) x k) squared-L2 distance matrix from an Arrow batch of
-    array cells against centroid matrix ``cmat``, computed as one GEMM
-    per ~64 MB row chunk. Shared by assign_clusters / assign_clusters_topp
-    (their hot path: the per-point pass every SemDeDup / IVF build pays).
+    array cells (or an already-stacked float64 matrix) against centroid
+    matrix ``cmat``, computed as one GEMM per ~64 MB row chunk. Shared
+    by assign_clusters / assign_clusters_topp (their hot path: the
+    per-point pass every SemDeDup / IVF build pays).
     Distances differ from the per-row subtract form only in float
     rounding — fine for assignment (parity unit-tested on random data);
     oracle-checked legs use the 'catalyst' backends, whose fold order
@@ -148,12 +149,15 @@ def _batched_sq_dists(vec, cmat):
 
     if len(vec) == 0:  # empty Arrow batch: (0 x k), argmin downstream is a no-op
         return np.empty((0, cmat.shape[0]), dtype=np.float64)
-    try:
-        mats = np.asarray(
-            [np.asarray(cell, dtype=np.float64) for cell in vec], dtype=np.float64
-        )
-    except ValueError:  # inhomogeneous cells raise before any ndim check
-        mats = None
+    if isinstance(vec, np.ndarray) and vec.ndim == 2:
+        mats = vec
+    else:
+        try:
+            mats = np.asarray(
+                [np.asarray(cell, dtype=np.float64) for cell in vec], dtype=np.float64
+            )
+        except ValueError:  # inhomogeneous cells raise before any ndim check
+            mats = None
     if mats is None or mats.ndim != 2:
         # ragged cells: per-row fallback (never on real data)
         return np.stack(

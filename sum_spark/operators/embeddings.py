@@ -332,6 +332,44 @@ def pq_codes_sql(items: list, m: int, vec_col: str) -> str:
     return "array(" + ", ".join(codes) + ")"
 
 
+def _require_integral_id(df: DataFrame, id_col: str, what: str) -> None:
+    """The numpy PQ encoders carry the id through their batches as
+    BIGINT; a non-integral id (string ids) would cast to NULL row by row
+    and every row would silently drop from the index — an empty index
+    with no error, while the catalyst path preserves any id type
+    (ADVICE r8). Refuse loudly instead."""
+    from pyspark.sql import types as T
+
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        raise TypeError(
+            f"{what} needs an integral id column; {id_col!r} is "
+            f"{id_type.simpleString()}. Map ids to BIGINT first (assign_ids)."
+        )
+
+
+def _pq_argmin_codes(x, cmat, keys, m: int):
+    """(rows x m) int64 PQ codes of the stacked batch ``x`` against the
+    full-vector book ``cmat`` (sorted ``keys``): per subspace,
+    ||x||^2 - 2 x.c + ||c||^2 over the whole batch, argmin to the FIRST
+    minimum = lowest code id. The expression is fixed: stored codes
+    must re-encode bit-identically for deletion-as-negation."""
+    import numpy as np
+
+    sd = cmat.shape[1] // m
+    out = np.empty((x.shape[0], m), dtype=np.int64)
+    for j in range(m):
+        xs = x[:, j * sd : (j + 1) * sd]
+        cs = cmat[:, j * sd : (j + 1) * sd]
+        d2 = (
+            (xs * xs).sum(axis=1)[:, None]
+            - 2.0 * (xs @ cs.T)
+            + (cs * cs).sum(axis=1)[None, :]
+        )
+        out[:, j] = keys[np.argmin(d2, axis=1)]
+    return out
+
+
 def _pq_codes_numpy(
     df: DataFrame,
     m: int,
@@ -340,32 +378,15 @@ def _pq_codes_numpy(
     vec_col: str,
     carry_coarse: bool = False,
 ) -> DataFrame:
-    """Arrow-batched GEMM PQ assignment (the large-k encode): per
-    subspace, ||x||^2 - 2 x.c + ||c||^2 over the whole batch, argmin to
-    the FIRST minimum = lowest code id (items are sorted). One NumPy
-    pass per batch, no plan literals — plan size O(1) in k."""
+    """Arrow-batched GEMM PQ assignment (the large-k encode,
+    :func:`_pq_argmin_codes`). One NumPy pass per batch, no plan
+    literals — plan size O(1) in k."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    # The schema below carries vec_id as BIGINT; a non-integral id
-    # (string ids) would cast to NULL row-by-row and the join back in
-    # write_pq_index would silently drop every row — an empty index with
-    # no error, while the small-k catalyst path preserves any id type
-    # (ADVICE r8). Refuse loudly instead.
-    id_type = df.schema[id_col].dataType
-    if not isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise TypeError(
-            f"product_quantize(backend='numpy') needs an integral id "
-            f"column; {id_col!r} is {id_type.simpleString()}. Use the "
-            f"catalyst backend, or map ids to BIGINT first (assign_ids)."
-        )
+    _require_integral_id(df, id_col, "product_quantize(backend='numpy')")
     keys = np.array([j for j, _ in items], dtype=np.int64)
     cmat = np.array([c for _, c in items], dtype=np.float64)
-    d = cmat.shape[1]
-    sd = d // m
 
     def _codes(batches):
         for pdf in batches:
@@ -374,16 +395,7 @@ def _pq_codes_numpy(
             x = np.array(
                 [np.asarray(v, dtype=np.float64) for v in pdf["__v"]]
             )
-            out = np.empty((len(pdf), m), dtype=np.int64)
-            for j in range(m):
-                xs = x[:, j * sd : (j + 1) * sd]
-                cs = cmat[:, j * sd : (j + 1) * sd]
-                d2 = (
-                    (xs * xs).sum(axis=1)[:, None]
-                    - 2.0 * (xs @ cs.T)
-                    + (cs * cs).sum(axis=1)[None, :]
-                )
-                out[:, j] = keys[np.argmin(d2, axis=1)]
+            out = _pq_argmin_codes(x, cmat, keys, m)
             cols = {"vec_id": pdf["__id"].values, "codes": list(out)}
             if carry_coarse:
                 cols["coarse"] = pdf["__coarse"].values

@@ -575,57 +575,20 @@ def knn_ivf_kmeans(
     pruned probes. Output: (probe_id, id, sim, rank), rank within the
     probed clusters; self-matches excluded.
     """
-    from sum_spark.operators.clustering import assign_clusters
+    from sum_spark.operators.clustering import assign_clusters, assign_clusters_topp
 
     if n_probes < 1:
         raise ValueError("n_probes must be >= 1")
-    items = sorted(centroids.items())
-    if not items:
-        raise ValueError("knn_ivf_kmeans needs at least one centroid")
-    n_probes = min(n_probes, len(items))
     r = assign_clusters(
         records, centroids, id_col=id_col, vec_col=vec_col, cluster_col="__cluster"
     )
-    from sum_spark.functions.litsql import darray
-
-    # The k x dims centroid literals render into ONE F.expr string
-    # (litsql / VERDICT r12 #6): built Column-by-Column this was
-    # ~k*dims py4j round trips of pure driver latency per plan build,
-    # for the identical Catalyst literal nodes (plan-identity pinned in
-    # tests/test_plans.py).
-    cent_lit = F.expr(
-        "array("
-        + ", ".join(
-            f"named_struct('c', {darray(float(x) for x in c)}, "
-            f"'j', CAST({int(j)} AS BIGINT))"
-            for j, c in items
-        )
-        + ")"
-    )
-    pv = F.col(vec_col).cast("array<double>")
-    # (dist, id) structs sort lexicographically: array_sort + slice is the
-    # n_probes-nearest-cluster selection, ties to the lower cluster id.
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                cent_lit,
-                lambda s: F.struct(
-                    F.aggregate(
-                        F.zip_with(pv, s["c"], lambda x, c: (x - c) * (x - c)),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ).alias("d"),
-                    s["j"].alias("j"),
-                ),
-            )
-        ),
-        1,
-        n_probes,
-    )
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("__pv"),
-        F.explode(F.transform(ranked, lambda s: s["j"])).alias("__cluster"),
+    # Each probe's n_probes nearest clusters: the catalyst fold of
+    # embeddings.sq_dist_structs_sql, ties to the lower cluster id.
+    p = assign_clusters_topp(
+        probes, centroids, n_probes, id_col, vec_col, cluster_col="__cluster",
+        backend="catalyst",
+    ).select(
+        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("__pv"), "__cluster"
     )
     sim = cosine(F.col(vec_col), F.col("__pv"))
     if round_to is not None:
@@ -670,8 +633,8 @@ def knn_ivfpq(
     quantizer, its m slices are the subspace codebooks. Production IVF-PQ
     trains residual codebooks over more iterations on a sample; this form
     keeps every number cross-engine reproducible (folds are strictly
-    left-to-right in Spark, DuckDB and the driver-side LUT loop, so the
-    doubles match bit-for-bit).
+    left-to-right in Spark, DuckDB and the driver-side LUT kernel
+    _probe_luts, so the doubles match bit-for-bit).
 
     ``probes`` must be small (their vectors are collected to build the
     LUT literals — the same bounded-small-side contract as
@@ -701,92 +664,56 @@ def knn_ivfpq(
         centroids = _centroids_from_sums(
             centroid_sums(init, "cluster", vec_col, 6).collect(), 6
         )
-    items = sorted(centroids.items())
-    sd = _pq_check_dims(items, m) // m
+    _pq_check_dims(sorted(centroids.items()), m)
 
     # Corpus index: (id, coarse cluster, m codes) — what a 100 TB
     # deployment stores (write with partitionBy(coarse) for pruning).
-    coarse = assign_clusters(
-        records, centroids, id_col, vec_col, cluster_col="__coarse",
-        backend="catalyst",
-    )
     if residual:
-        # Residual = v - centroid[coarse], one map-side zip_with; the
-        # residual codebook trains on these with the same one-step
-        # recipe (hash-init on the SAME ids, one fixed-point aggregate).
-        cent_map = _cent_map_expr(items)
-        res = coarse.select(
-            F.col(id_col),
-            "__coarse",
-            F.zip_with(
-                F.col(vec_col).cast("array<double>"),
-                F.element_at(cent_map, F.col("__coarse")),
-                lambda x, c: x - c,
-            ).alias("__res"),
-        )
+        # Residual = v - centroid[coarse] (_residualize, shared with the
+        # stored index); the residual codebook trains on these with the
+        # same one-step recipe (hash-init on the SAME ids, one
+        # fixed-point aggregate).
+        coarse = _residualize(records, centroids, id_col, vec_col, backend="catalyst")
         codes, pq_book = product_quantize(
-            res, m=m, k=n_codes, id_col=id_col, vec_col="__res"
-        )
-        index = res.select(F.col(id_col), "__coarse").join(
-            codes.select(F.col("vec_id").alias(id_col), "codes"), id_col
+            coarse, m=m, k=n_codes, id_col=id_col, vec_col="__res"
         )
     else:
+        coarse = assign_clusters(
+            records, centroids, id_col, vec_col, cluster_col="coarse",
+            backend="catalyst",
+        )
         pq_book = centroids
         codes, _ = product_quantize(
             records, m=m, k=n_codes, id_col=id_col, vec_col=vec_col,
             centroids=centroids,
         )
-        index = coarse.select(F.col(id_col), "__coarse").join(
-            codes.select(F.col("vec_id").alias(id_col), "codes"), id_col
-        )
-    book_items = sorted(pq_book.items())
+    index = coarse.select(F.col(id_col), "coarse").join(
+        codes.select(F.col("vec_id").alias(id_col), "codes"), id_col
+    )
 
-    # Probe-side: LUTs computed on the driver with the SAME sequential
-    # fold order as the engines (bit-reproducible doubles).
+    # Probe side: coarse list and LUT doubles from the shared kernel
+    # (the engines' left-to-right fold, bit for bit).
     probe_rows = probes.select(
         F.col(id_col).alias("__pid"), F.col(vec_col).cast("array<double>").alias("__pv")
     ).collect()
-
-    def _sqdist(q: list[float], c: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(q, c):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    cent_by_id = dict(items)
+    pairs, luts_by_key = _probe_luts(
+        centroids, pq_book if residual else None, probe_rows, m, 1
+    )
     legs = []
-    for row in probe_rows:
-        q = [float(x) for x in row["__pv"]]
-        # Coarse list for this probe: lexicographic (dist, id) argmin —
-        # identical rule to assign_clusters' catalyst fold.
-        best = min(
-            ((_sqdist(q, c), cid) for cid, c in items), key=lambda t: (t[0], t[1])
-        )[1]
-        if residual:
-            cb = cent_by_id[best]
-            qv = [x - c for x, c in zip(q, cb)]
-        else:
-            qv = q
+    for i, (pid, best) in enumerate(pairs):
         adc = None
-        for j in range(m):
-            lut = F.map_from_arrays(
-                F.array(*[F.lit(int(cid)).cast("long") for cid, _ in book_items]),
-                F.array(
-                    *[
-                        F.lit(_sqdist(qv[j * sd : (j + 1) * sd], c[j * sd : (j + 1) * sd]))
-                        for _, c in book_items
-                    ]
-                ),
+        for j, lut in enumerate(luts_by_key[i if residual else pid]):
+            lut_col = F.map_from_arrays(
+                F.array(*[F.lit(code).cast("long") for code in lut]),
+                F.array(*[F.lit(v) for v in lut.values()]),
             )
-            term = F.element_at(lut, F.col("codes")[j])
+            term = F.element_at(lut_col, F.col("codes")[j])
             adc = term if adc is None else adc + term
         if round_to is not None:
             adc = F.round(adc, round_to)
         legs.append(
-            index.where(
-                (F.col("__coarse") == int(best)) & (F.col(id_col) != int(row["__pid"]))
-            ).select(
-                F.lit(int(row["__pid"])).alias("probe_id"),
+            index.where((F.col("coarse") == best) & (F.col(id_col) != pid)).select(
+                F.lit(pid).alias("probe_id"),
                 F.col(id_col),
                 adc.alias("adc"),
             )
@@ -1153,118 +1080,89 @@ def pq_serve_context(spark, path: str, id_col: str = "id", cache: dict | None = 
     return ctx
 
 
-def _sqdist_py(q, c):
-    acc = 0.0
-    for x, y in zip(q, c):
-        acc = acc + (x - y) * (x - y)
+def _sq_dists_fold(Q, C):
+    """(rows(Q) x rows(C)) float64 squared L2 distances, accumulated one
+    coordinate at a time from 0.0: ``acc + d*d`` with ``d = q_t - c_t``
+    are the IEEE operations, in the order, of the left-to-right fold that
+    Catalyst's ``aggregate(zip_with(...))`` and DuckDB's ``list_sum``
+    run, so every cell equals the oracle's double. A numpy
+    ``.sum(axis=...)`` adds pairwise once a row is 8 or more wide and
+    differs in the last bits."""
+    import numpy as np
+
+    if Q.shape[1] != C.shape[1]:
+        raise ValueError(f"dims differ: {Q.shape[1]} vs {C.shape[1]}")
+    acc = np.zeros((Q.shape[0], C.shape[0]), dtype=np.float64)
+    d = np.empty_like(acc)
+    # one contiguous row per coordinate; the in-place ufuncs are the same
+    # IEEE subtract, multiply and add as ``acc = acc + d * d``
+    for q, c in zip(np.ascontiguousarray(Q.T), np.ascontiguousarray(C.T)):
+        np.subtract(q[:, None], c[None, :], out=d)
+        np.multiply(d, d, out=d)
+        np.add(acc, d, out=acc)
     return acc
 
 
-def _probe_luts(book, res_book, probe_rows, m, n_probes, lut_backend):
-    """Driver-side stage-1 serve planning shared by the plan-building
-    search (knn_ivfpq_from_index) and the driver serve backend
-    (_rerank_driver): per probe, its ``n_probes`` nearest coarse lists
-    and the m per-subspace code->distance LUT maps.
+def _probe_luts(book, res_book, probe_rows, m, n_probes):
+    """Driver-side probe planning shared by every IVF-PQ search
+    (knn_ivfpq, knn_ivfpq_from_index and the driver serve backend
+    _rerank_driver): per probe, its ``n_probes`` nearest coarse lists
+    (lexicographic (distance, id) order, ties to the lower id) and the m
+    per-subspace code->distance LUT maps.
 
-    Returns ``(pairs, luts_by_key)``: pairs is [(pid, cid, qv)] one per
-    (probe, probed list) — qv is the probe's residual q - c_list for a
-    residual index, None for raw (one shared LUT per probe); luts_by_key
-    maps pid (raw) or pair index (residual) to the m maps.
+    Returns ``(pairs, luts_by_key)``: pairs is [(pid, cid)] one per
+    (probe, probed list); luts_by_key maps pid (raw: one shared LUT per
+    probe) or pair index (residual: the LUT of the probe's residual
+    q - c_list) to the m maps.
 
     LUT TABLE shape rationale (both encodings): for a residual index the
     LUT genuinely differs per (probe, list); a raw index repeats the
     probe's one LUT per probed list. Driver-held and bounded by the
-    small-probe contract (probes x n_probes x m x k doubles). Large
-    books (n_cells='auto': k ~ 4*sqrt(N)) tabulate via one numpy
-    broadcast per subspace instead of a Python loop over k x m cells;
-    small books keep the Python fold whose left-to-right sums the
-    oracle legs hash-match ('auto' gate at _LARGE_K; 'python'/'numpy'
-    force a side — the streaming sinks force numpy, paying tabulation
-    every trigger)."""
+    small-probe contract (probes x n_probes x m x k doubles). Every
+    distance, coarse and per-subspace, comes from ONE kernel,
+    :func:`_sq_dists_fold`, batched over all rows: its cells are the
+    oracle's left-to-right fold bit for bit at every book size and
+    subspace width."""
+    import numpy as np
+
+    if not probe_rows:
+        return [], {}
     items = sorted(book.items())
-    d = len(items[0][1])
-    sd = d // m
-    cent_by_id = dict(items)
-    lut_items = sorted(res_book.items()) if res_book is not None else items
+    keys = np.array([cid for cid, _ in items], dtype=np.int64)
+    cmat = np.array([c for _, c in items], dtype=np.float64)
+    sd = cmat.shape[1] // m
     n_probes = max(1, min(int(n_probes), len(items)))
-
-    # auto-sized coarse book: hoist the (k x d) matrix ONCE, not per probe
-    nearest_np = None
-    if len(items) > _LARGE_K:
-        import numpy as np
-
-        nearest_np = (
-            np.array([cid for cid, _ in items], dtype=np.int64),
-            np.array([c for _, c in items], dtype=np.float64),
-        )
-
-    def _nearest(q):
-        if nearest_np is not None:
-            import numpy as np
-
-            keys, cmat = nearest_np
-            d2 = ((cmat - np.asarray(q, dtype=np.float64)) ** 2).sum(axis=1)
-            return keys[np.lexsort((keys, d2))][:n_probes].tolist()
-        return [
-            cid
-            for _, cid in sorted(
-                ((_sqdist_py(q, c), cid) for cid, c in items),
-                key=lambda t: (t[0], t[1]),
-            )[:n_probes]
-        ]
-
-    if lut_backend not in ("auto", "python", "numpy"):
-        raise ValueError(f"lut_backend must be auto|python|numpy, got {lut_backend!r}")
-    use_numpy = lut_backend == "numpy" or (
-        lut_backend == "auto" and len(lut_items) > _LARGE_K
+    pids = [int(r["__pid"]) for r in probe_rows]
+    qmat = np.array(
+        [[float(x) for x in r["__pv"]] for r in probe_rows], dtype=np.float64
     )
-    # (pid, cid, qv) per (probe, probed list); for a RAW index qv is the
-    # probe itself — tabulate ONCE per probe and share the maps across
-    # its probed lists instead of recomputing identical cells per list.
-    pairs = []
-    for row in probe_rows:
-        q = [float(x) for x in row["__pv"]]
-        for cid in _nearest(q):
-            qv = (
-                [x - c for x, c in zip(q, cent_by_id[cid])]
-                if res_book is not None
-                else None  # raw: shared per-probe LUT, tabulated below
-            )
-            pairs.append((int(row["__pid"]), int(cid), qv))
+    d2 = _sq_dists_fold(qmat, cmat)
+    nearest = np.lexsort((np.broadcast_to(keys, d2.shape), d2))[:, :n_probes]
+    rows = np.repeat(np.arange(len(pids)), n_probes)
+    cidx = nearest.reshape(-1)
+    pairs = [(pids[r], cid) for r, cid in zip(rows.tolist(), keys[cidx].tolist())]
     if res_book is None:
-        tab_keys = [(int(r["__pid"]), [float(x) for x in r["__pv"]]) for r in probe_rows]
+        # raw: one LUT per probe, shared by its probed lists
+        lut_items, tab, tab_keys = items, qmat, pids
     else:
-        tab_keys = [(i, qv) for i, (_, _, qv) in enumerate(pairs)]
-    if use_numpy and tab_keys:
-        import numpy as np
-
-        codes_py = [int(code) for code, _ in lut_items]
-        cmat = np.array([c for _, c in lut_items], dtype=np.float64)
-        qmat = np.array([qv for _, qv in tab_keys], dtype=np.float64)
-        # same squared-difference reduction (and therefore the same
-        # bits) as the per-row form this replaces — only batched over
-        # all rows, so a trigger pays m reductions, not rows x m loops
-        luts_by_key = {kid: [] for kid, _ in tab_keys}
-        for j in range(m):
-            d2 = (
-                (qmat[:, None, j * sd : (j + 1) * sd] - cmat[None, :, j * sd : (j + 1) * sd])
-                ** 2
-            ).sum(axis=2)
-            for r, (kid, _) in enumerate(tab_keys):
-                luts_by_key[kid].append(dict(zip(codes_py, d2[r].tolist())))
-    else:
-        luts_by_key = {
-            kid: [
-                {
-                    int(code): _sqdist_py(
-                        qv[j * sd : (j + 1) * sd], c[j * sd : (j + 1) * sd]
-                    )
-                    for code, c in lut_items
-                }
-                for j in range(m)
-            ]
-            for kid, qv in tab_keys
-        }
+        lut_items, tab = sorted(res_book.items()), qmat[rows] - cmat[cidx]
+        tab_keys = range(len(pairs))
+    codes = [int(code) for code, _ in lut_items]
+    lmat = np.array([c for _, c in lut_items], dtype=np.float64)
+    cells = np.stack(
+        [
+            _sq_dists_fold(tab[:, j * sd : (j + 1) * sd], lmat[:, j * sd : (j + 1) * sd])
+            for j in range(m)
+        ],
+        axis=1,
+    )
+    # one row's lists at a time: a whole-matrix tolist() keeps every
+    # cell alive at once and the collector rescans them (~15 ms at 200
+    # probes x 8 x 256)
+    luts_by_key = {
+        kid: [dict(zip(codes, lut)) for lut in row.tolist()]
+        for kid, row in zip(tab_keys, cells)
+    }
     return pairs, luts_by_key
 
 
@@ -1278,7 +1176,6 @@ def knn_ivfpq_from_index(
     vec_col: str = "data",
     round_to: int | None = None,
     n_probes: int = 1,
-    lut_backend: str = "auto",
     serve_ctx: dict | None = None,
     probe_rows: list | None = None,
     ordered: bool = True,
@@ -1308,13 +1205,10 @@ def knn_ivfpq_from_index(
     (probe, list); a raw index repeats the probe's one LUT per probed
     list, keeping the join shape identical.
 
-    ``lut_backend`` is the ONE tabulation switch (VERDICT r8 #2):
-    'auto' keeps the size gate (Python fold up to _LARGE_K entries —
-    the left-to-right sums the oracle legs hash-match — numpy past it),
-    'python'/'numpy' force a side (the streaming sinks force numpy:
-    their books sit under the gate but they pay the tabulation EVERY
-    trigger, and the numpy cells batch over all (probe, list) rows in
-    m reductions). ``serve_ctx`` (pq_serve_context) skips the per-call
+    The lists and LUT doubles come from _probe_luts, one kernel whose
+    cells equal the oracle's left-to-right fold at every book size, so
+    no caller picks a tabulation form. ``serve_ctx`` (pq_serve_context)
+    skips the per-call
     codebook collects and index re-listing for repeated serves of an
     unchanged index. ``probe_rows`` (rows of (__pid, __pv) — the exact
     projection collected here) lets a caller serving SEVERAL indexes for
@@ -1329,16 +1223,14 @@ def knn_ivfpq_from_index(
             F.col(id_col).alias("__pid"),
             F.col(vec_col).cast("array<double>").alias("__pv"),
         ).collect()
-    pairs, luts_by_key = _probe_luts(
-        book, res_book, probe_rows, m, n_probes, lut_backend
-    )
+    pairs, luts_by_key = _probe_luts(book, res_book, probe_rows, m, n_probes)
 
     if serve_ctx is not None and serve_ctx.get("path") == path:
         idx = serve_ctx["idx"]
     else:
         idx = pq_index_rows(spark, path, id_col)
     lut_rows = []
-    for i, (pid, cid, qv) in enumerate(pairs):
+    for i, (pid, cid) in enumerate(pairs):
         luts = luts_by_key[pid] if res_book is None else luts_by_key[i]
         lut_rows.append((pid, cid, luts))
     lut_df = spark.createDataFrame(
@@ -1405,7 +1297,6 @@ def _rerank_driver(
     round_to: int | None,
     n_probes: int,
     adc_round_to: int | None,
-    lut_backend: str,
     serve_ctx: dict | None,
     probe_rows: list | None = None,
 ) -> DataFrame:
@@ -1423,8 +1314,8 @@ def _rerank_driver(
     instead of the full composed plan's job/stage cascade per trigger
     (measured ~5x per-trigger cost at bench_streaming's 200-probe
     batches, BASELINE round-9 streaming table). Results are BIT-EQUAL to
-    the plan path at the same lut_backend: the ADC is the same
-    left-to-right sum of the same LUT doubles, the cosine is the same
+    the plan path: both take their lists and LUT doubles from
+    _probe_luts, the ADC is the same left-to-right sum of them, the cosine is the same
     fold order as functions/vector.cosine, rounding is the BigDecimal
     HALF_UP twin, and both rank tie-breaks replicate exactly
     (parity-tested)."""
@@ -1439,10 +1330,8 @@ def _rerank_driver(
             F.col(id_col).alias("__pid"),
             F.col(vec_col).cast("array<double>").alias("__pv"),
         ).collect()
-    pairs, luts_by_key = _probe_luts(
-        book, res_book, probe_rows, m, n_probes, lut_backend
-    )
-    probed = sorted({cid for _, cid, _ in pairs})
+    pairs, luts_by_key = _probe_luts(book, res_book, probe_rows, m, n_probes)
+    probed = sorted({cid for _, cid in pairs})
     # Per-context LRU over coarse lists' code rows (VERDICT r9 #3): a
     # months-long stream probing diverse lists must not converge on
     # holding the whole codes table driver-side. dict preserves
@@ -1479,7 +1368,7 @@ def _rerank_driver(
     # left-to-right m-lookup sum as the plan's element_at chain — then
     # the per-probe (adc asc, id asc) top-c cut.
     by_probe: dict = {}
-    for i, (pid, cid, _qv) in enumerate(pairs):
+    for i, (pid, cid) in enumerate(pairs):
         luts = luts_by_key[pid] if res_book is None else luts_by_key[i]
         bucket = by_probe.setdefault(pid, [])
         for rid, codes in lists[cid]:
@@ -1572,7 +1461,6 @@ def knn_ivfpq_rerank(
     round_to: int | None = None,
     n_probes: int = 1,
     adc_round_to: int | None = None,
-    lut_backend: str = "auto",
     serve_ctx: dict | None = None,
     serve_backend: str = "plan",
     probe_rows: list | None = None,
@@ -1605,10 +1493,10 @@ def knn_ivfpq_rerank(
 
     ``adc_round_to`` rounds the stage-1 ADC scores BEFORE the candidate
     cut (cross-engine-reproducible candidate sets for the oracle);
-    ``round_to`` rounds the exact cosine output. ``lut_backend`` /
-    ``serve_ctx`` pass through to the stage-1 search (repeated serves —
-    the streaming sink — force numpy tabulation and reuse the loaded
-    books/index across triggers, see knn_ivfpq_from_index). Output:
+    ``round_to`` rounds the exact cosine output. ``serve_ctx`` passes
+    through to the stage-1 search (repeated serves — the streaming sink
+    — reuse the loaded books/index across triggers, see
+    knn_ivfpq_from_index). Output:
     (probe_id, id_col, sim, rank) — sim is true cosine, rank descending
     by it within the probe's candidate set.
 
@@ -1622,7 +1510,7 @@ def knn_ivfpq_rerank(
     if serve_backend == "driver":
         return _rerank_driver(
             spark, path, corpus, probes, k, c, m, id_col, vec_col,
-            round_to, n_probes, adc_round_to, lut_backend, serve_ctx,
+            round_to, n_probes, adc_round_to, serve_ctx,
             probe_rows=probe_rows,
         )
     cand = knn_ivfpq_from_index(
@@ -1635,7 +1523,6 @@ def knn_ivfpq_rerank(
         vec_col=vec_col,
         round_to=adc_round_to,
         n_probes=n_probes,
-        lut_backend=lut_backend,
         serve_ctx=serve_ctx,
         probe_rows=probe_rows,
     ).select("probe_id", id_col)
@@ -1679,24 +1566,19 @@ def _pq_encode_raw_numpy(
     join on id to recombine them (guide §2.4/§4). Arithmetic is
     bit-identical to both: coarse uses the same _batched_sq_dists GEMM +
     first-minimum argmin over ascending keys; codes use the same
-    per-subspace GEMM identity as _pq_codes_numpy."""
+    embeddings._pq_argmin_codes as _pq_codes_numpy."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     from sum_spark.operators.clustering import _batched_sq_dists
-    from sum_spark.operators.embeddings import _pq_check_dims
+    from sum_spark.operators.embeddings import (
+        _pq_argmin_codes,
+        _pq_check_dims,
+        _require_integral_id,
+    )
 
-    id_type = records.schema[id_col].dataType
-    if not isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise TypeError(
-            f"large-k PQ encode needs an integral id column; {id_col!r} "
-            f"is {id_type.simpleString()} (the _pq_codes_numpy contract)."
-        )
-    d = _pq_check_dims(items, m)
-    sd = d // m
+    _require_integral_id(records, id_col, "large-k PQ encode")
+    _pq_check_dims(items, m)
     keys = np.array([j for j, _ in items], dtype=np.int64)
     cmat = np.array([c for _, c in items], dtype=np.float64)
 
@@ -1705,20 +1587,13 @@ def _pq_encode_raw_numpy(
             if not len(pdf):
                 continue
             x = np.array([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
-            D = _batched_sq_dists(list(x), cmat)
-            coarse = keys[np.argmin(D, axis=1)]
-            out = np.empty((len(pdf), m), dtype=np.int64)
-            for j in range(m):
-                xs = x[:, j * sd : (j + 1) * sd]
-                cs = cmat[:, j * sd : (j + 1) * sd]
-                d2 = (
-                    (xs * xs).sum(axis=1)[:, None]
-                    - 2.0 * (xs @ cs.T)
-                    + (cs * cs).sum(axis=1)[None, :]
-                )
-                out[:, j] = keys[np.argmin(d2, axis=1)]
+            coarse = keys[np.argmin(_batched_sq_dists(x, cmat), axis=1)]
             yield pd.DataFrame(
-                {"__id": pdf["__id"].values, "coarse": coarse, "codes": list(out)}
+                {
+                    "__id": pdf["__id"].values,
+                    "coarse": coarse,
+                    "codes": list(_pq_argmin_codes(x, cmat, keys, m)),
+                }
             )
 
     src = records.select(

@@ -1024,15 +1024,15 @@ def q_knn_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # 'tb'/'gk': the PRODUCTION-SHAPED stored indexes (VERDICT r8 #1/#2)
         # — n_cells='auto' coarse quantizer (past _LARGE_K, so the large-k
-        # machinery engages: numpy _nearest + join-residualize at build,
-        # GEMM code assignment and numpy LUT tabulation on the raw 'gk'
-        # index), m=8 subspaces, and for 'tb' a res_iters=4 LLOYD-TRAINED
-        # residual book — with the same A/append/retire maintenance history
-        # as 'incr'. No SQL re-derives Lloyd or matches GEMM bit-for-bit;
-        # the oracle instead READS the stored _codebook/_codebook_res
-        # parquet (exactly like it reads index rows) and reproduces encode
-        # argmins, residuals, probe LUTs, ADC, and the candidate cut from
-        # them (_duck_stored_book_ctes). The artifact dir is keyed by pid
+        # machinery engages: join-residualize and GEMM code assignment
+        # at build; the serve plans probes with the same fold kernel as
+        # every other leg), m=8 subspaces, and for 'tb' a res_iters=4
+        # LLOYD-TRAINED residual book — with the same A/append/retire
+        # maintenance history as 'incr'. No SQL re-derives Lloyd or
+        # matches GEMM bit-for-bit; the oracle instead READS the stored
+        # _codebook/_codebook_res parquet (exactly like it reads index
+        # rows) and reproduces encode argmins, residuals, probe LUTs,
+        # ADC, and the candidate cut from them (_duck_stored_book_ctes). The artifact dir is keyed by pid
         # only — oracle strings cannot know sf_dir — so the fn tracks the
         # sf it last built for and rebuilds on change (_TB_BUILT).
         for tag, need, kwargs, memo_dir in (

@@ -216,21 +216,18 @@ def streaming_ann_rerank(
 
     Per-trigger fixed cost (VERDICT r8 #2): the sink holds ONE serving
     context across triggers (pq_serve_context — codebooks loaded once,
-    index layout re-listed only when the on-disk generation changes),
-    forces the numpy LUT tabulation (``lut_backend='numpy'``: the
-    batched m-reduction form), and serves through the DRIVER backend
+    index layout re-listed only when the on-disk generation changes)
+    and serves through the DRIVER backend
     (``serve_backend='driver'``, similarity._rerank_driver): a
     micro-batch's intermediates are all driver-bounded by contract, so
     the serve pays a small constant number of Spark jobs (probe
     collect, candidate raw-vector fetch, plus ONE cold probed-list code
     fetch per index generation — hot lists cached in the context; the
     accounting is pinned by test_rerank_driver_bounded_job_contract)
-    instead of the composed plan's job/stage cascade per trigger. numpy reduction order differs from
-    the Python fold in the last bits — engine-deterministic, same
-    contract as every large-k path — so stream==batch parity is against
-    the batch rerank at the SAME backend (tests pass
-    lut_backend='numpy' to the batch side too; driver==plan backend
-    bit-parity is pinned in test_similarity_ops)."""
+    instead of the composed plan's job/stage cascade per trigger. The
+    sink's rows are bit-equal to the default batch rerank: both backends
+    plan probes with the one _probe_luts kernel (driver==plan bit-parity
+    is pinned in test_similarity_ops)."""
     from sum_spark.operators.similarity import knn_ivfpq_rerank, pq_serve_context
 
     serve_cache: dict = {}
@@ -257,7 +254,6 @@ def streaming_ann_rerank(
                 id_col=id_col,
                 vec_col=vec_col,
                 round_to=round_to,
-                lut_backend="numpy",
                 serve_ctx=pq_serve_context(
                     batch_df.sparkSession, index_path, cache=serve_cache
                 ),

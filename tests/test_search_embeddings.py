@@ -659,3 +659,81 @@ def test_sample_weighted_k_per_stratum(spark):
     with contextlib.redirect_stdout(buf):
         out.explain("formatted")
     assert "WindowGroupLimit" in buf.getvalue()
+
+
+@pytest.mark.parametrize("n_probes", [1, 3])
+def test_knn_ivf_kmeans_probe_side_matches_column_reference(spark, n_probes):
+    """knn_ivf_kmeans picks each probe's lists with assign_clusters_topp's
+    catalyst fold; its rows must be bit-equal to the Column-API
+    (distance, id) struct sort it replaced, at d=64 (past numpy's
+    pairwise-sum width) with a duplicate centroid for a tie."""
+    import struct
+
+    import numpy as np
+    from pyspark.sql import Window as W
+
+    from sum_spark.functions.vector import cosine
+    from sum_spark.operators.clustering import assign_clusters
+    from sum_spark.operators.similarity import knn_ivf_kmeans
+
+    rng = np.random.default_rng(64)
+    d = 64
+    recs = spark.createDataFrame(
+        [(i, rng.standard_normal(d).tolist()) for i in range(120)],
+        "id long, data array<double>",
+    )
+    cents = {j: rng.standard_normal(d).tolist() for j in range(6)}
+    cents[6] = list(cents[2])
+    probes = recs.where("id < 6")
+    got = knn_ivf_kmeans(recs, probes, 7, cents, n_probes=n_probes)
+
+    cent_lit = F.array(
+        *[
+            F.struct(
+                F.array(*[F.lit(float(x)) for x in c]).alias("c"),
+                F.lit(int(j)).cast("long").alias("j"),
+            )
+            for j, c in sorted(cents.items())
+        ]
+    )
+    pv = F.col("data").cast("array<double>")
+    ranked = F.slice(
+        F.array_sort(
+            F.transform(
+                cent_lit,
+                lambda s: F.struct(
+                    F.aggregate(
+                        F.zip_with(pv, s["c"], lambda x, c: (x - c) * (x - c)),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x,
+                    ).alias("d"),
+                    s["j"].alias("j"),
+                ),
+            )
+        ),
+        1,
+        n_probes,
+    )
+    p = probes.select(
+        F.col("id").alias("probe_id"),
+        F.col("data").alias("__pv"),
+        F.explode(F.transform(ranked, lambda s: s["j"])).alias("__cluster"),
+    )
+    r = assign_clusters(recs, cents, id_col="id", vec_col="data", cluster_col="__cluster")
+    w = W.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("id"))
+    want = (
+        r.join(F.broadcast(p), "__cluster")
+        .where(F.col("id") != F.col("probe_id"))
+        .select("probe_id", "id", cosine(F.col("data"), F.col("__pv")).alias("sim"))
+        .withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= 7)
+    )
+
+    def packed(df):
+        return sorted(
+            (r["probe_id"], r["id"], struct.pack("<d", r["sim"]), r["rank"])
+            for r in df.collect()
+        )
+
+    rows = packed(want)
+    assert packed(got) == rows and rows

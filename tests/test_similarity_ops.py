@@ -1451,15 +1451,11 @@ def test_numpy_backend_refuses_non_integral_ids(spark):
     assert codes.count() == 50
 
 
-def test_lut_backend_switch_and_serve_context(spark, tmp_path):
-    """VERDICT r8 #2: the unified LUT gate — lut_backend='numpy' batches
-    the tabulation but must return the same neighbors as the Python fold
-    at output rounding; 'auto' keeps the size gate (oracle legs stay
-    put). pq_serve_context reuses loaded books/index across repeated
+def test_pq_serve_context_reuse(spark, tmp_path):
+    """pq_serve_context reuses loaded books/index across repeated
     serves of an UNCHANGED index and rebuilds when the on-disk
     generation changes."""
     import numpy as np
-    import pytest
 
     import sum_spark.operators.similarity as S
 
@@ -1480,18 +1476,7 @@ def test_lut_backend_switch_and_serve_context(spark, tmp_path):
             ).collect(),
         )
     )
-    via_np = sorted(
-        map(
-            tuple,
-            S.knn_ivfpq_from_index(
-                spark, p, probes, k=5, m=2, round_to=4, n_probes=2,
-                lut_backend="numpy",
-            ).collect(),
-        )
-    )
-    assert base == via_np and base
-    with pytest.raises(ValueError, match="lut_backend"):
-        S.knn_ivfpq_from_index(spark, p, probes, k=5, m=2, lut_backend="gpu")
+    assert base
 
     # serve context: reuse while unchanged, same results through it
     cache: dict = {}
@@ -1682,7 +1667,8 @@ def test_round_half_up_py_matches_spark_round(spark):
 
 def test_rerank_driver_backend_bit_equals_plan(spark, tmp_path):
     """serve_backend='driver' must return bit-identical rows to the plan
-    path at the same lut_backend — raw and residual indexes, through a
+    path — raw and residual indexes, subspaces 4 and 32 wide (numpy's
+    pairwise .sum() would differ from the fold past 8), through a
     retire (netting), at round_to=4 and unrounded."""
     import struct
 
@@ -1696,12 +1682,6 @@ def test_rerank_driver_backend_bit_equals_plan(spark, tmp_path):
     )
 
     rng = np.random.default_rng(29)
-    d = 8
-    corpus = spark.createDataFrame(
-        [(i, rng.standard_normal(d).tolist()) for i in range(300)],
-        "vec_id long, embedding array<double>",
-    )
-    probes = corpus.where("vec_id < 5")
     kw = dict(k=6, c=20, m=2, n_probes=3, id_col="vec_id", vec_col="embedding")
 
     def packed(df):
@@ -1710,39 +1690,37 @@ def test_rerank_driver_backend_bit_equals_plan(spark, tmp_path):
             for r in df.collect()
         )
 
-    for tag, res in (("raw", False), ("res", True)):
-        idx = str(tmp_path / f"pq_{tag}")
-        write_pq_index(
-            corpus, idx, m=2, n_codes=8, id_col="vec_id", vec_col="embedding",
-            residual=res, res_iters=2 if res else 0,
+    for d in (8, 64):
+        corpus = spark.createDataFrame(
+            [(i, rng.standard_normal(d).tolist()) for i in range(300)],
+            "vec_id long, embedding array<double>",
         )
-        retire_from_pq_index(
-            corpus.where("vec_id % 7 = 3"), idx, id_col="vec_id", vec_col="embedding"
-        )
-        cache: dict = {}
-        for lb in ("python", "numpy"):
+        probes = corpus.where("vec_id < 5")
+        for tag, res in (("raw", False), ("res", True)):
+            idx = str(tmp_path / f"pq_{tag}_{d}")
+            write_pq_index(
+                corpus, idx, m=2, n_codes=8, id_col="vec_id", vec_col="embedding",
+                residual=res, res_iters=2 if res else 0,
+            )
+            retire_from_pq_index(
+                corpus.where("vec_id % 7 = 3"), idx, id_col="vec_id", vec_col="embedding"
+            )
+            cache: dict = {}
             for rt in (4, None):
-                plan = knn_ivfpq_rerank(
-                    spark, idx, corpus, probes, round_to=rt,
-                    lut_backend=lb, **kw,
-                )
+                plan = knn_ivfpq_rerank(spark, idx, corpus, probes, round_to=rt, **kw)
                 drv = knn_ivfpq_rerank(
-                    spark, idx, corpus, probes, round_to=rt,
-                    lut_backend=lb, serve_backend="driver",
+                    spark, idx, corpus, probes, round_to=rt, serve_backend="driver",
                     serve_ctx=pq_serve_context(spark, idx, cache=cache),
                     **kw,
                 )
-                assert packed(plan) == packed(drv), (tag, lb, rt)
-        # the cached context must invalidate on a further mutation
-        retire_from_pq_index(
-            corpus.where("vec_id % 11 = 5"), idx, id_col="vec_id", vec_col="embedding"
-        )
-        plan = knn_ivfpq_rerank(
-            spark, idx, corpus, probes, round_to=4, lut_backend="numpy", **kw
-        )
-        drv = knn_ivfpq_rerank(
-            spark, idx, corpus, probes, round_to=4, lut_backend="numpy",
-            serve_backend="driver",
-            serve_ctx=pq_serve_context(spark, idx, cache=cache), **kw,
-        )
-        assert packed(plan) == packed(drv), (tag, "post-retire")
+                assert packed(plan) == packed(drv), (d, tag, rt)
+            # the cached context must invalidate on a further mutation
+            retire_from_pq_index(
+                corpus.where("vec_id % 11 = 5"), idx, id_col="vec_id", vec_col="embedding"
+            )
+            plan = knn_ivfpq_rerank(spark, idx, corpus, probes, round_to=4, **kw)
+            drv = knn_ivfpq_rerank(
+                spark, idx, corpus, probes, round_to=4, serve_backend="driver",
+                serve_ctx=pq_serve_context(spark, idx, cache=cache), **kw,
+            )
+            assert packed(plan) == packed(drv), (d, tag, "post-retire")

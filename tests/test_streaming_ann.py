@@ -337,16 +337,12 @@ def test_streaming_ann_rerank_matches_batch(spark, tmp_path):
         (r["probe_id"], r["vec_id"], r["sim"], r["rank"])
         for r in spark.read.parquet(out_dir).collect()
     )
-    # the sink forces lut_backend='numpy' (per-trigger tabulation cost);
-    # numpy reduction order differs from the Python fold in the last
-    # bits, so parity is against the batch rerank at the SAME backend
     want = sorted(
         map(
             tuple,
             knn_ivfpq_rerank(
                 spark, idx, corpus, probes, k=5, c=20, m=2, n_probes=2,
                 id_col="vec_id", vec_col="embedding", round_to=4,
-                lut_backend="numpy",
             ).collect(),
         )
     )
