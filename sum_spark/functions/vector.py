@@ -32,8 +32,10 @@ Design notes (Spark-first, not a port):
   assert on ``F.size``.
 
 A vectorized NumPy/Arrow path (the ``blas32`` analog,
-node/backend/blas32.go:41-43) lives in ``vector_pandas.py``; selection
-between the two mirrors ``backend.Select`` (node/backend/backend.go:26-36).
+node/backend/blas32.go:41-43) lives in ``vector_pandas.py``. In place of
+the reference's global ``backend.Select`` (node/backend/backend.go:26-36),
+each call site picks one: the ``vec_*`` SQL functions bind the Arrow
+kernels, operators call these expressions.
 """
 
 from __future__ import annotations

@@ -1,6 +1,9 @@
 """Vectorized NumPy backend for the vector kernels — the analog of the
-reference's ``blas32`` backend (/root/reference/node/backend/blas32.go:41-43),
-selected like ``backend.Select`` (node/backend/backend.go:26-36).
+reference's ``blas32`` backend (/root/reference/node/backend/blas32.go:41-43).
+The reference picks its backend with one global ``backend.Select``
+(node/backend/backend.go:26-36); here the caller picks per call site: the
+``vec_*`` SQL functions (functions/sql.py) bind these Arrow kernels, and
+operators call the Catalyst expressions in ``vector.py`` directly.
 
 Arrow UDFs: each batch arrives as an Arrow list array, and every kernel
 is a segmented sum (``np.add.reduceat``) over the list's flat values and
@@ -12,33 +15,16 @@ up to a few hundred, the pure-Catalyst expressions in ``vector.py`` win
 because they never leave the JVM.
 
 Unlike the reference — whose backend serializes every call behind a global
-mutex (node/backend/backend.go:8,67-71) — both backends here parallelize
-per-partition.
+mutex (node/backend/backend.go:8,67-71) — both kernel sets here
+parallelize per-partition.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
-
-_BACKEND = "catalyst"  # {"catalyst", "numpy"}; reference default is "blas32"
-
-
-def select_backend(name: str) -> None:
-    """Choose the kernel implementation, mirroring backend.Select
-    (node/backend/backend.go:26-36). 'catalyst' ≈ 'naive' (but codegen'd
-    and parallel), 'numpy' ≈ 'blas32'."""
-    if name not in ("catalyst", "numpy"):
-        raise ValueError(f"unknown backend {name!r}")
-    global _BACKEND
-    _BACKEND = name
-
-
-def current_backend() -> str:
-    return _BACKEND
 
 
 def _segment_sums(x: np.ndarray, offsets: np.ndarray) -> np.ndarray:
@@ -110,24 +96,3 @@ def cosine_np(a: pa.Array, b: pa.Array) -> pa.Array:
     with np.errstate(divide="ignore", invalid="ignore"):
         out = np.where(zero, 0.0, dots / np.where(zero, 1.0, den))
     return _out(out, na | nb | (~zero & dot_null))
-
-
-def dot_auto(a: Column | str, b: Column | str) -> Column:
-    """Backend-dispatched dot, like the reference's pluggable Dot kernel."""
-    from sum_spark.functions import vector
-
-    if _BACKEND == "numpy":
-        a = F.col(a) if isinstance(a, str) else a
-        b = F.col(b) if isinstance(b, str) else b
-        return dot_np(a, b)
-    return vector.dot(a, b)
-
-
-def cosine_auto(a: Column | str, b: Column | str) -> Column:
-    from sum_spark.functions import vector
-
-    if _BACKEND == "numpy":
-        a = F.col(a) if isinstance(a, str) else a
-        b = F.col(b) if isinstance(b, str) else b
-        return cosine_np(a, b)
-    return vector.cosine(a, b)

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from sum_spark.functions.hashing import hash60_sql
 from sum_spark.functions.litsql import qid
+from sum_spark.operators.dedup import block_count, block_pair_cosine
 from sum_spark.operators.embeddings import mean_pool, sq_dist_structs_sql
 
 
@@ -294,7 +295,6 @@ def inertia(
     df: DataFrame,
     centroids: dict[int, list[float]],
     vec_col: str = "embedding",
-    backend: str = "numpy",
 ) -> float:
     """Sum of squared distances to each row's nearest centroid — the
     quantity Lloyd iterations are non-increasing in (up to the
@@ -372,11 +372,12 @@ def semantic_dedup(
 
     Scale shape — the reason this beats whole-corpus near-dup at 100 TB:
     after assignment, each cluster splits into S hash sub-blocks sized to
-    a bounded float64 matrix (same memory-bound auto-K rule as
-    dedup_embedding_cosine, dedup.py:585-600); candidate block pairs meet
-    in an equi-join ON THE CLUSTER ID (S*(S+1)/2 pairs per cluster — a
-    k-fold reduction of the global block-pair count), and a NumPy GEMM
-    per block pair emits only above-threshold pairs. Cross-cluster
+    a bounded float64 matrix (dedup.block_count, the memory-bound rule
+    dedup_embedding_cosine also sizes by, clamped to 1..64 per cluster);
+    candidate block pairs meet in an equi-join ON THE CLUSTER ID
+    (S*(S+1)/2 pairs per cluster — a k-fold reduction of the global
+    block-pair count), and the shared NumPy block kernel
+    (dedup.block_pair_cosine) emits only above-threshold pairs. Cross-cluster
     near-dups are out of scope by construction — that recall trade *is*
     the SemDeDup method; use dedup_embedding_lsh when global recall
     matters.
@@ -392,9 +393,6 @@ def semantic_dedup(
     sample) to skip the fit — the production pattern: fit on 0.1%, assign
     + dedup the full corpus in one pass.
     """
-    import numpy as np
-    import pandas as pd
-
     if centroids is None:
         if k == "auto":
             k = sem_auto_k(df.count())
@@ -410,83 +408,11 @@ def semantic_dedup(
             df, centroids, id_col, vec_col, backend=assign_backend
         )
 
-    par = max(2, df.sparkSession.sparkContext.defaultParallelism)
-    if n_subblocks:
-        S = int(n_subblocks)
-    else:
-        try:
-            est = float(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        except Exception:
-            est = float(64 << 20)
-        # Per-cluster share of the corpus, blocked to ~64 MB f64 matrices.
-        S = min(64, max(1, int(2.0 * est / max(1, len(centroids)) / (64 << 20)) + 1))
-
-    rows = assigned.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.col("cluster").alias("cl"),
-        F.pmod(F.hash(F.col(id_col)), F.lit(S)).alias("b"),
+    S = int(n_subblocks) if n_subblocks else block_count(
+        df, 1, 64, groups=max(1, len(centroids))
     )
-    packed = (
-        rows.groupBy("cl", "b")
-        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
-        .select(
-            "cl",
-            "b",
-            F.transform("rows", lambda r: r["id"]).alias("ids"),
-            F.flatten(F.transform("rows", lambda r: r["v"])).alias("flat"),
-        )
-    )
-    left = packed.select("cl", F.col("b").alias("ba"), F.col("ids").alias("ia"), F.col("flat").alias("fa"))
-    right = packed.select("cl", F.col("b").alias("bb"), F.col("ids").alias("ib"), F.col("flat").alias("fb"))
-    # The right side is the ENTIRE packed corpus (every cluster's id+vector
-    # blocks) — broadcast only when the size estimate says it fits (test
-    # scale); at corpus scale the equi-join on cl must stay a shuffled hash
-    # join, which preserves per-cluster locality just as well.
-    from sum_spark.plans.scale import is_broadcastable
-
-    right_side = F.broadcast(right) if is_broadcastable(packed, 64 << 20) else right
-    pairs = (
-        left.join(right_side, ["cl"])
-        .where(F.col("ba") <= F.col("bb"))
-        .repartition(min(len(centroids) * S * (S + 1) // 2, 2 * par), "cl", "ba", "bb")
-    )
-    thr = float(threshold)
-
-    def gemm(it):
-        def unpack(ids_cell, flat_cell):
-            ids = np.asarray(ids_cell, dtype=np.int64)
-            mat = np.asarray(flat_cell, dtype=np.float64).reshape(len(ids), -1)
-            nrm = np.linalg.norm(mat, axis=1)
-            mat = mat / np.where(nrm == 0.0, 1.0, nrm)[:, None]
-            return ids, mat
-
-        for pdf in it:
-            for cl, ba, ia_c, fa_c, bb, ib_c, fb_c in zip(
-                pdf["cl"], pdf["ba"], pdf["ia"], pdf["fa"], pdf["bb"], pdf["ib"], pdf["fb"]
-            ):
-                ia, ma = unpack(ia_c, fa_c)
-                ib, mb = (ia, ma) if ba == bb else unpack(ib_c, fb_c)
-                sims = ma @ mb.T
-                if ba == bb:
-                    mask = (sims >= thr) & (ia[:, None] < ib[None, :])
-                    li, rj = np.nonzero(mask)
-                    lo, hi = ia[li], ib[rj]
-                else:
-                    li, rj = np.nonzero(sims >= thr)
-                    lo = np.minimum(ia[li], ib[rj])
-                    hi = np.maximum(ia[li], ib[rj])
-                yield pd.DataFrame(
-                    {
-                        "id_a": lo,
-                        "id_b": hi,
-                        "sim": np.round(sims[li, rj], 4),
-                        "cluster": np.full(len(lo), cl, dtype=np.int64),
-                    }
-                )
-
-    out = pairs.mapInPandas(
-        gemm, schema="id_a long, id_b long, sim double, cluster long"
+    out = block_pair_cosine(
+        assigned, threshold, S, id_col, vec_col, key="cluster", n_keys=len(centroids)
     )
     if int(probes) > 1:
         # A pair whose BOTH members share two probed clusters is found

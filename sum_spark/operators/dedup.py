@@ -28,8 +28,12 @@ from sum_spark.functions.hashing import (
     minhash_signature_pandas,
 )
 from sum_spark.functions.text import SHINGLE_N, regex_quote, tokens, word_shingles
-from sum_spark.plans.scale import release_with, spread_for_compute
-from sum_spark.functions.vector import cosine
+from sum_spark.plans.scale import (
+    is_broadcastable,
+    plan_size_bytes,
+    release_with,
+    spread_for_compute,
+)
 
 # Persisted-intermediate lifetime management now lives in plans.scale;
 # the private alias keeps this module's call sites unchanged.
@@ -939,6 +943,146 @@ def dedup_simhash(
     return _release_with(out, sh)
 
 
+# Each block decodes to a float64 matrix of at most about this many bytes.
+GEMM_BLOCK_BYTES = 64 << 20
+
+
+def block_count(df: DataFrame, lo: int, hi: int, groups: int = 1) -> int:
+    """Blocks per group for the blocked cosine kernel, clamped to
+    [lo, hi]: the plan-size estimate of ``df`` (parquet floats are ~2x
+    as f64; no estimate counts as one block's worth) split over
+    ``groups`` groups, one block per GEMM_BLOCK_BYTES.
+
+    Memory-bound, not core-bound: a tiny corpus gets few blocks (stage
+    and task overhead dominates sub-second GEMMs — measured 2x slower at
+    K=11 vs K=4 on 5k x 64), and at 100 TB the memory bound alone forces
+    K >> cores, so utilization follows."""
+    est = plan_size_bytes(df)
+    if est is None:
+        est = float(GEMM_BLOCK_BYTES)
+    return min(hi, max(lo, int(2.0 * est / groups / GEMM_BLOCK_BYTES) + 1))
+
+
+def pack_blocks(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """(id, v, *keys) rows -> one (*keys, ids, flat) row per block.
+
+    A block is (ids: array<long>, flat: array<double>) rather than
+    array<struct>: Arrow ships a flat double array zero-copy and NumPy
+    reshapes it in place, where struct cells decode via per-row Python
+    dicts (~10x the unpack cost, paid once per block pair)."""
+    return (
+        rows.groupBy(*keys)
+        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
+        .select(
+            *keys,
+            F.transform("rows", lambda r: r["id"]).alias("ids"),
+            F.flatten(F.transform("rows", lambda r: r["v"])).alias("flat"),
+        )
+    )
+
+
+def unit_block(ids_cell, flat_cell):
+    """A packed block as (int64 ids, float64 unit rows). A zero row is
+    divided by 1.0 and stays zero, so its cosine with anything is 0.0
+    (the reference's zero-magnitude rule)."""
+    import numpy as np
+
+    ids = np.asarray(ids_cell, dtype=np.int64)
+    mat = np.asarray(flat_cell, dtype=np.float64).reshape(len(ids), -1)
+    nrm = np.linalg.norm(mat, axis=1)
+    return ids, mat / np.where(nrm == 0.0, 1.0, nrm)[:, None]
+
+
+def block_pairs(a, b, threshold: float, same: bool):
+    """(lo, hi, sim) arrays of the pairs between unit blocks ``a`` and
+    ``b`` whose cosine is >= ``threshold``, with lo < hi by id and sim
+    rounded to 4 places.
+
+    ``same``: ``b`` is ``a`` itself, and only its upper triangle by id
+    counts. Otherwise the blocks are disjoint, so every hit is a distinct
+    unordered pair, oriented by id.
+
+    These normalize-then-GEMM sims differ in the last bits from
+    functions.vector.cosine; the near-dup oracles pin these."""
+    import numpy as np
+
+    (ia, ma), (ib, mb) = a, b
+    sims = ma @ mb.T
+    if same:
+        li, rj = np.nonzero((sims >= threshold) & (ia[:, None] < ib[None, :]))
+        lo, hi = ia[li], ib[rj]
+    else:
+        li, rj = np.nonzero(sims >= threshold)
+        lo = np.minimum(ia[li], ib[rj])
+        hi = np.maximum(ia[li], ib[rj])
+    return lo, hi, np.round(sims[li, rj], 4)
+
+
+def block_pair_cosine(
+    df: DataFrame,
+    threshold: float,
+    n_blocks: int,
+    id_col: str,
+    vec_col: str,
+    key: str | None = None,
+    n_keys: int = 1,
+) -> DataFrame:
+    """All pairs of ``df`` rows with cosine >= ``threshold`` — within one
+    ``key`` group when a key is given. Output: (id_a, id_b, sim[, key]).
+
+    Each row hashes to one of ``n_blocks`` blocks per group; each
+    (key, block) packs into one row; the block pairs ba <= bb meet in a
+    join (on ``key`` when given); mapInPandas scores each block pair with
+    block_pairs. Shuffle volume is N*K rows (each block is shipped to its
+    K partner pairs); compute is the inherent O(N²) of exact all-pairs.
+
+    The right side is the whole packed corpus, so it is broadcast only
+    when the plan-size estimate puts it under 64 MB; otherwise the join
+    shuffles on ``key`` (or runs as a cartesian product without one)."""
+    import numpy as np
+    import pandas as pd
+
+    keys = [key] if key else []
+    rows = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+        *keys,
+        F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("b"),
+    )
+    packed = pack_blocks(rows, [*keys, "b"])
+    left, right = (
+        packed.selectExpr(*keys, f"b AS b{s}", f"ids AS i{s}", f"flat AS f{s}")
+        for s in "ab"
+    )
+    if is_broadcastable(packed, 64 << 20):
+        right = F.broadcast(right)
+    par = max(2, df.sparkSession.sparkContext.defaultParallelism)
+    n_pairs = n_keys * n_blocks * (n_blocks + 1) // 2
+    pairs = (
+        left.join(right, keys or None)
+        .where(F.col("ba") <= F.col("bb"))
+        .repartition(min(n_pairs, 2 * par), *keys, "ba", "bb")
+    )
+    thr = float(threshold)
+
+    def score(it):
+        for pdf in it:
+            groups = pdf[key] if key else [None] * len(pdf)
+            cols = (pdf[c] for c in ("ba", "ia", "fa", "bb", "ib", "fb"))
+            for g, ba, ia, fa, bb, ib, fb in zip(groups, *cols):
+                a = unit_block(ia, fa)
+                same = ba == bb
+                b = a if same else unit_block(ib, fb)
+                lo, hi, sim = block_pairs(a, b, thr, same)
+                out = {"id_a": lo, "id_b": hi, "sim": sim}
+                if key:
+                    out[key] = np.full(len(lo), g, dtype=np.int64)
+                yield pd.DataFrame(out)
+
+    schema = "id_a long, id_b long, sim double" + (f", {key} long" if key else "")
+    return pairs.mapInPandas(score, schema=schema)
+
+
 def dedup_embedding_cosine(
     df: DataFrame,
     threshold: float = 0.45,
@@ -949,108 +1093,29 @@ def dedup_embedding_cosine(
 ) -> DataFrame:
     """Embedding near-dup: all pairs with cosine >= threshold (exact).
 
-    Executed as a block-pair equi-join GEMM, fully distributed — nothing
-    ever funnels through the driver:
+    Executed as a block-pair GEMM (block_pair_cosine), fully distributed
+    — nothing ever funnels through the driver:
 
-      1. each row hashes to one of K blocks; a groupBy packs each block
-         into a single (ids, vectors) row;
-      2. the K x (K+1)/2 block pairs (ba <= bb) meet in a tiny join
-         (K rows per side — the small side broadcasts);
+      1. each row hashes to one of K blocks (block_count, 4..256); a
+         groupBy packs each block into a single (ids, vectors) row;
+      2. the K x (K+1)/2 block pairs (ba <= bb) meet in a join of K rows
+         per side, the packed side broadcast only when its size estimate
+         is under 64 MB (plans.scale.is_broadcastable);
       3. mapInPandas normalizes both blocks and computes block_a @
-         block_b^T with NumPy, emitting only above-threshold
-         upper-triangle pairs.
+         block_b^T with NumPy, emitting only above-threshold pairs.
 
     This avoids both the O(N²) Catalyst pair join (~40x slower: two norms
-    + a 64-dim dot recomputed per pair) and the previous driver-side
-    broadcast build (a collect bounded by driver memory). Shuffle volume
-    is N*K rows (each block is shipped to its K partner pairs); compute
-    is the inherent O(N²) of exact all-pairs — for corpora where that is
-    too much, prune candidates first (knn_ivf buckets / LSH), the reason
-    those operators exist.
+    + a 64-dim dot recomputed per pair) and a driver-side broadcast
+    build (a collect bounded by driver memory). The 256-block cap keeps
+    the N*K shuffle amplification sane; for corpora where exact all-pairs
+    is too much, prune candidates first (knn_ivf buckets / LSH), the
+    reason those operators exist.
     Zero-magnitude rows follow the cosine->0.0 rule (the row is zeroed by
     normalization, so it never crosses a positive threshold).
     """
-    import numpy as np
-    import pandas as pd
-
-    # Auto-K is memory-bound, not core-bound: each block must decode to a
-    # bounded float64 matrix (~64 MB), so K grows linearly with the input
-    # size estimate and a tiny corpus gets few blocks (stage/task overhead
-    # dominates sub-second GEMMs — measured 2x slower at K=11 vs K=4 on
-    # 5k x 64). At 100 TB the memory bound alone forces K >> cores, so
-    # utilization follows; the cap keeps the N*K shuffle amplification
-    # sane (beyond it, prune with knn_ivf instead of exact all-pairs).
-    par = max(2, df.sparkSession.sparkContext.defaultParallelism)
-    if n_blocks:
-        K = int(n_blocks)
-    else:
-        try:
-            est = float(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            est = float(64 << 20)
-        k_mem = int(2.0 * est / (64 << 20)) + 1  # parquet floats -> ~2x as f64
-        K = min(256, max(4, k_mem))
-    rows = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.pmod(F.hash(F.col(id_col)), F.lit(K)).alias("b"),
-    )
-    # Pack each block as (ids: array<long>, flat: array<double>) rather
-    # than array<struct>: Arrow ships a flat double array zero-copy and
-    # NumPy reshapes it in place, where struct cells decode via per-row
-    # Python dicts (~10x the unpack cost, paid K times per block).
-    packed = (
-        rows.groupBy("b")
-        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
-        .select(
-            "b",
-            F.transform("rows", lambda r: r["id"]).alias("ids"),
-            F.flatten(F.transform("rows", lambda r: r["v"])).alias("flat"),
-        )
-    )
-    left = packed.select(F.col("b").alias("ba"), F.col("ids").alias("ia"), F.col("flat").alias("fa"))
-    right = packed.select(F.col("b").alias("bb"), F.col("ids").alias("ib"), F.col("flat").alias("fb"))
-    pairs = left.join(F.broadcast(right), F.col("ba") <= F.col("bb")).repartition(
-        min(K * (K + 1) // 2, 2 * par), "ba", "bb"
-    )
-    thr = float(threshold)
-
-    def gemm(it):
-        def unpack(ids_cell, flat_cell):
-            ids = np.asarray(ids_cell, dtype=np.int64)
-            mat = np.asarray(flat_cell, dtype=np.float64).reshape(len(ids), -1)
-            nrm = np.linalg.norm(mat, axis=1)
-            mat = mat / np.where(nrm == 0.0, 1.0, nrm)[:, None]
-            return ids, mat
-
-        for pdf in it:
-            for ba, ra_i, ra_f, bb, rb_i, rb_f in zip(
-                pdf["ba"], pdf["ia"], pdf["fa"], pdf["bb"], pdf["ib"], pdf["fb"]
-            ):
-                ia, ma = unpack(ra_i, ra_f)
-                ib, mb = (ia, ma) if ba == bb else unpack(rb_i, rb_f)
-                sims = ma @ mb.T
-                if ba == bb:
-                    # Upper triangle by id within the block.
-                    mask = (sims >= thr) & (ia[:, None] < ib[None, :])
-                    li, rj = np.nonzero(mask)
-                    lo, hi = ia[li], ib[rj]
-                else:
-                    # Disjoint blocks: every hit is a distinct unordered
-                    # pair; orient it by id.
-                    li, rj = np.nonzero(sims >= thr)
-                    lo = np.minimum(ia[li], ib[rj])
-                    hi = np.maximum(ia[li], ib[rj])
-                yield pd.DataFrame(
-                    {"id_a": lo, "id_b": hi, "sim": np.round(sims[li, rj], 4)}
-                )
-
-    return (
-        pairs.mapInPandas(gemm, schema="id_a long, id_b long, sim double")
-        .transform(lambda d: d.orderBy("id_a", "id_b") if ordered else d)
-    )
+    K = int(n_blocks) if n_blocks else block_count(df, 4, 256)
+    out = block_pair_cosine(df, threshold, K, id_col, vec_col)
+    return out.orderBy("id_a", "id_b") if ordered else out
 
 
 def _cc_union_find(edge_rows) -> dict[int, int]:
@@ -1107,8 +1172,9 @@ def dedup_embedding_lsh(
     dot with a fixed ±1 hyperplane); the bits split into ``n_bands``
     bands, candidate pairs share at least one band bucket (an equi-join
     on (band, key) — never all-pairs), and survivors are verified with
-    the exact Catalyst cosine kernel, so every emitted pair is a true
-    >= threshold pair (the output is a subset of the exact operator's).
+    the same NumPy GEMM on unit rows as the exact operator (block_pairs),
+    so every emitted pair is a true >= threshold pair (the output is a
+    subset of the exact operator's).
 
     Recall is the standard SRP curve: P(bit match) = 1 - acos(sim)/π, a
     band of r bits matches with p^r, any-of-b bands with 1-(1-p^r)^b —
@@ -1119,13 +1185,13 @@ def dedup_embedding_lsh(
 
     Verification never materializes candidate pairs as rows: each (band,
     bucket) group packs into one (ids, flat-vectors) row and a NumPy GEMM
-    scores the bucket's pairs in a single BLAS call (the bucket-local form
-    of dedup_embedding_cosine's block GEMM) — shuffle volume is N×bands
+    scores the bucket's pairs in a single BLAS call (pack_blocks and
+    block_pairs, the same-block case of dedup_embedding_cosine's block
+    GEMM; buckets of one row are skipped) — shuffle volume is N×bands
     vector rows, not O(candidate pairs). A pair found by several bands
     produces identical (deterministic GEMM) rows, collapsed by distinct.
     Output: (id_a, id_b, sim) ordered.
     """
-    import numpy as np
     import pandas as pd
 
     from sum_spark.functions.litsql import darray, qid
@@ -1166,40 +1232,20 @@ def dedup_embedding_lsh(
         v.alias("v"),
         F.expr(bk).alias("bk"),
     ).select("id", "v", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    # Pack each bucket like dedup_embedding_cosine packs blocks: flat
-    # double array (zero-copy through Arrow) + parallel id list.
-    packed = (
-        bands.groupBy("band", "key")
-        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
-        .select(
-            F.transform("rows", lambda x: x["id"]).alias("ids"),
-            F.flatten(F.transform("rows", lambda x: x["v"])).alias("flat"),
-        )
-    )
+    packed = pack_blocks(bands, ["band", "key"]).select("ids", "flat")
     thr = float(threshold)
 
-    def bucket_gemm(it):
+    def verify(it):
         for pdf in it:
-            for ids_cell, flat_cell in zip(pdf["ids"], pdf["flat"]):
-                ids = np.asarray(ids_cell, dtype=np.int64)
+            for ids, flat in zip(pdf["ids"], pdf["flat"]):
                 if len(ids) < 2:
                     continue
-                mat = np.asarray(flat_cell, dtype=np.float64).reshape(len(ids), -1)
-                nrm = np.linalg.norm(mat, axis=1)
-                mat = mat / np.where(nrm == 0.0, 1.0, nrm)[:, None]
-                sims = mat @ mat.T
-                mask = (sims >= thr) & (ids[:, None] < ids[None, :])
-                li, rj = np.nonzero(mask)
-                yield pd.DataFrame(
-                    {
-                        "id_a": ids[li],
-                        "id_b": ids[rj],
-                        "sim": np.round(sims[li, rj], 4),
-                    }
-                )
+                blk = unit_block(ids, flat)
+                lo, hi, sim = block_pairs(blk, blk, thr, same=True)
+                yield pd.DataFrame({"id_a": lo, "id_b": hi, "sim": sim})
 
     return (
-        packed.mapInPandas(bucket_gemm, schema="id_a long, id_b long, sim double")
+        packed.mapInPandas(verify, schema="id_a long, id_b long, sim double")
         .distinct()
         .transform(lambda d: d.orderBy("id_a", "id_b") if ordered else d)
     )

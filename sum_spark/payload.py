@@ -57,13 +57,10 @@ def info(spark, records_df=None, registry=None) -> dict:
     proto ServerInfo): engine + dataset statistics, including the
     reference's memory block (runtime.MemStats there; JVM heap + cached
     storage here — the quantities a Spark operator actually watches)."""
-    from sum_spark.functions.vector_pandas import current_backend
-
     sc = spark.sparkContext
     out = {
         "engine": "sum_spark",
         "version": sc.version,
-        "backend": current_backend(),
         "cores": sc.defaultParallelism,
         "records": records_df.count() if records_df is not None else 0,
         "oracles": registry.list(per_page=10**9)[0] if registry is not None else 0,

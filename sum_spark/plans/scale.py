@@ -130,6 +130,15 @@ def carry_caches(derived: DataFrame, *sources: DataFrame) -> DataFrame:
     return derived
 
 
+def plan_size_bytes(df: DataFrame) -> float | None:
+    """The optimizer's size estimate for ``df`` in bytes, or None when
+    the plan has no statistics to give."""
+    try:
+        return float(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+
+
 def is_broadcastable(df: DataFrame, threshold: int = 8 << 20) -> bool:
     """True when the optimizer's size estimate for ``df`` fits under
     ``threshold`` bytes — the guard a broadcast HINT must sit behind: a
@@ -138,11 +147,8 @@ def is_broadcastable(df: DataFrame, threshold: int = 8 << 20) -> bool:
     a driver collect + 8 GB relation failure at scale. Estimates of
     aggregated/derived frames are conservative (they descend from the
     scan stats), which errs toward NOT broadcasting — the safe side."""
-    try:
-        est = float(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        return est < threshold
-    except Exception:
-        return False
+    est = plan_size_bytes(df)
+    return est is not None and est < threshold
 
 
 def salted_join(

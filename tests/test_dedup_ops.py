@@ -142,6 +142,37 @@ def test_embedding_cosine_no_driver_collect(spark):
         assert all(4 not in p and 5 not in p for p in got)
 
 
+def test_block_pair_kernel_on_hand_built_blocks():
+    """The cosine-pair kernel every embedding near-dup operator shares
+    (unit_block + block_pairs), on hand-built blocks without Spark:
+    same-block pairs are the upper triangle by id, cross-block pairs come
+    out as (min, max), zero and anti-parallel rows never pair, a sim
+    equal to the threshold is kept and sims are rounded to 4 places."""
+    import numpy as np
+
+    def blk(rows):
+        return dedup.unit_block([i for i, _ in rows], [x for _, v in rows for x in v])
+
+    def pairs(a, b, thr, same):
+        lo, hi, sim = dedup.block_pairs(a, b, thr, same)
+        return {(int(x), int(y)): float(s) for x, y, s in zip(lo, hi, sim)}
+
+    # Three parallel rows stored out of id order, a zero row and a row
+    # anti-parallel to the others.
+    a = blk([(9, [1.0, 1.0]), (2, [2.0, 2.0]), (5, [3.0, 3.0]),
+             (4, [0.0, 0.0]), (7, [-1.0, -1.0])])
+    assert pairs(a, a, 0.5, same=True) == {(2, 5): 1.0, (2, 9): 1.0, (5, 9): 1.0}
+
+    # cos([1, 0], [1, 1]) is exactly 1/||[1, 1]||: the threshold itself.
+    thr = 1.0 / np.sqrt(2.0)
+    b = blk([(1, [1.0, 0.0]), (8, [1.0, 1.0])])
+    c = blk([(3, [1.0, 0.0]), (6, [0.0, 0.0]), (12, [3.0, 1.0])])
+    got = pairs(b, c, thr, same=False)
+    assert got == {(1, 3): 1.0, (3, 8): 0.7071, (1, 12): 0.9487, (8, 12): 0.8944}
+    above = pairs(b, c, np.nextafter(thr, 1.0), same=False)
+    assert above == {(1, 3): 1.0, (1, 12): 0.9487, (8, 12): 0.8944}
+
+
 def test_dedup_clusters_transitive(spark):
     # Chain A-B, B-C, C-D (one 4-node component, diameter 3 — forces
     # multiple propagation rounds) plus an isolated pair E-F.

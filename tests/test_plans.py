@@ -100,6 +100,34 @@ def test_find_similar_topk_evaluates_kernel_once(spark, sf_smoke):
     assert ">=" not in join
 
 
+def test_embedding_cosine_broadcast_sits_behind_size_guard(
+    spark, sf_smoke, monkeypatch
+):
+    """dedup_embedding_cosine hints a broadcast of the packed corpus only
+    when plans.scale.is_broadcastable allows it. With the guard saying no
+    and Spark's own size-based broadcast off, the executed plan holds no
+    broadcast, and the rows equal the default run's."""
+    from sum_spark.operators import dedup
+    from sum_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_smoke, "embeddings")
+    want = dedup.dedup_embedding_cosine(emb, threshold=0.45).collect()
+    assert want
+    monkeypatch.setattr(dedup, "is_broadcastable", lambda df, threshold=0: False)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = dedup.dedup_embedding_cosine(emb, threshold=0.45)
+        got = df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "BroadcastExchange" not in plan
+    assert got == want
+
+
 def test_bm25_broadcasts_stats_and_takes_ordered(spark, sf_smoke):
     p = plan_of(spark, sf_smoke, "bm25_search")
     # The one-row stats side must broadcast (never shuffle the corpus

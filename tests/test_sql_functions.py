@@ -118,15 +118,14 @@ def test_python_xxh64_matches_spark_xxhash64(spark):
         assert got[c] == xxh64_str(c), repr(c)
 
 def test_litsql_batched_constructs_match_column_api(spark):
-    """VERDICT r12 #6: the last three F.lit-loop constructs
-    (knn_ivf_kmeans centroids, inertia centroids, random_project
-    planes) now render as ONE expr string each. litsql doubles are
-    exact, so the batched columns must be BIT-identical to the old
-    Column-by-Column construction — asserted by exact value equality
-    of the rendered literals / projected outputs."""
+    """VERDICT r12 #6: the F.lit-loop constructs of inertia centroids
+    and random_project planes now render as ONE expr string each. litsql
+    doubles are exact, so the batched columns must be BIT-identical to
+    the old Column-by-Column construction — asserted by exact value
+    equality of the rendered literals / projected outputs."""
     from pyspark.sql import functions as F
 
-    from sum_spark.functions.litsql import darray, dlit
+    from sum_spark.functions.litsql import darray
 
     cents = {0: [0.25, -1.5, 3.0], 2: [1e-17, 7.125, -0.1]}
     items = sorted(cents.items())
@@ -140,29 +139,6 @@ def test_litsql_batched_constructs_match_column_api(spark):
     )
     row = spark.range(1).select(old_arr.alias("o"), new_arr.alias("n")).first()
     assert row["o"] == row["n"]
-
-    # knn_ivf_kmeans's cent_lit: array of (c: array<double>, j: bigint)
-    old_st = F.array(
-        *[
-            F.struct(
-                F.array(*[F.lit(float(x)) for x in c]).alias("c"),
-                F.lit(int(j)).cast("long").alias("j"),
-            )
-            for j, c in items
-        ]
-    )
-    new_st = F.expr(
-        "array("
-        + ", ".join(
-            f"named_struct('c', {darray(float(x) for x in c)}, "
-            f"'j', CAST({int(j)} AS BIGINT))"
-            for j, c in items
-        )
-        + ")"
-    )
-    row = spark.range(1).select(old_st.alias("o"), new_st.alias("n")).first()
-    assert row["o"] == row["n"]
-    assert row["n"][0]["j"] == 0 and row["n"][1]["c"][1] == 7.125
 
     # random_project: batched projection vs the old per-plane lambdas
     from sum_spark.operators.dedup import srp_planes

@@ -117,18 +117,6 @@ def test_numpy_backend_parity(vec_df):
         assert r["c1"] == pytest.approx(r["c2"], abs=1e-9)
 
 
-def test_backend_select_dispatch(vec_df):
-    VP.select_backend("numpy")
-    try:
-        got = _one(vec_df, VP.dot_auto("a", "b"))
-        assert got == pytest.approx(126.0)
-    finally:
-        VP.select_backend("catalyst")
-    assert _one(vec_df, VP.dot_auto("a", "b")) == pytest.approx(126.0)
-    with pytest.raises(ValueError):
-        VP.select_backend("blas99")
-
-
 @pytest.mark.parametrize("batch", [1000, 1])
 def test_numpy_backend_ragged_batches(spark, vec_df, batch):
     """The NumPy kernels agree with the Catalyst path whatever the Arrow
