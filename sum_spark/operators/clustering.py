@@ -301,25 +301,10 @@ def inertia(
     fixed-point centroid quantization); used by tests to verify
     convergence, not part of any checked output (cross-row double sums
     are layout-dependent)."""
-    from sum_spark.functions.litsql import darray
-
-    items = sorted(centroids.items())
     # one expr string, not k*dims F.lit round trips (litsql / VERDICT
-    # r12 #6) — identical Catalyst literal nodes
-    cent_lit = F.expr(
-        "array(" + ", ".join(darray(float(x) for x in c) for _, c in items) + ")"
-    )
-    v = F.col(vec_col).cast("array<double>")
-    d = F.array_min(
-        F.transform(
-            cent_lit,
-            lambda c: F.aggregate(
-                F.zip_with(v, c, lambda x, cc: (x - cc) * (x - cc)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-    )
+    # r12 #6): the same left-to-right fold as the assignment
+    v = f"CAST({qid(vec_col)} AS ARRAY<DOUBLE>)"
+    d = F.expr(f"array_min({sq_dist_structs_sql(sorted(centroids.items()), v)}).d")
     row = df.select(F.sum(d).alias("s")).collect()[0]
     return float(row["s"] or 0.0)
 

@@ -207,7 +207,6 @@ def product_quantize(
     vec_col: str = "embedding",
     fixed_point: int = 6,
     centroids: dict[int, list[float]] | None = None,
-    backend: str = "catalyst",
     ordered: bool = True,
 ) -> tuple[DataFrame, dict[int, list[float]]]:
     """Product quantization (PQ — Jégou et al. 2011): split each vector
@@ -242,18 +241,11 @@ def product_quantize(
     e.g. from a previous train or shared with a coarse IVF quantizer)
     to skip the train aggregate and only assign codes.
 
-    ``backend='catalyst'`` (default) bakes the codebook into the plan as
-    literals — the oracle-checkable strictly-left-to-right fold, but the
-    plan size is O(k x d): past ~64 entries the py4j literal build and
-    the codegen block dominate. ``backend='numpy'`` assigns via one
-    Arrow-batched GEMM argmin per subspace (same ties-to-lowest-id rule;
-    float summation order differs in the last bits, so it is
-    ENGINE-deterministic — identical reruns, which is what encode
-    determinism for deletion-as-negation needs — but not
-    oracle-reproducible). The auto-sized coarse quantizer path
-    (similarity.write_pq_index n_cells='auto') selects it for large k;
-    its output id column is cast to BIGINT (mapInPandas needs a fixed
-    schema).
+    The codebook is baked into the plan as literals — the
+    oracle-checkable strictly-left-to-right fold, with plan size
+    O(k x d). Index builds with books past 64 entries encode through
+    similarity._pq_rows instead, whose GEMM encoder ships the book as
+    data.
     """
     from sum_spark.operators.clustering import (
         _centroids_from_sums,
@@ -271,9 +263,6 @@ def product_quantize(
             centroid_sums(init, "cluster", vec_col, fixed_point).collect(), fixed_point
         )
     items = sorted(cents.items())
-    if backend == "numpy":
-        _pq_check_dims(items, m)
-        return _pq_codes_numpy(df, m, items, id_col, vec_col), cents
     codes = df.selectExpr(
         f"{qid(id_col)} AS vec_id", f"{pq_codes_sql(items, m, vec_col)} AS codes"
     ).transform(lambda d: d.orderBy("vec_id") if ordered else d)
@@ -371,20 +360,19 @@ def _pq_argmin_codes(x, cmat, keys, m: int):
 
 
 def _pq_codes_numpy(
-    df: DataFrame,
-    m: int,
-    items: list,
-    id_col: str,
-    vec_col: str,
-    carry_coarse: bool = False,
+    df: DataFrame, m: int, items: list, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Arrow-batched GEMM PQ assignment (the large-k encode,
-    :func:`_pq_argmin_codes`). One NumPy pass per batch, no plan
-    literals — plan size O(1) in k."""
+    """(vec_id, codes, coarse) — Arrow-batched GEMM PQ assignment
+    (:func:`_pq_argmin_codes`) of a frame that already carries its
+    ``coarse`` id: similarity._pq_rows' encoder for a residual book past
+    64 entries. One NumPy pass per batch, no plan literals — plan size
+    O(1) in k; the coarse id rides through the batch, so the index rows
+    come out of ONE python pass with no join back on id."""
     import numpy as np
     import pandas as pd
 
-    _require_integral_id(df, id_col, "product_quantize(backend='numpy')")
+    _require_integral_id(df, id_col, "large-k PQ encode")
+    _pq_check_dims(items, m)
     keys = np.array([j for j, _ in items], dtype=np.int64)
     cmat = np.array([c for _, c in items], dtype=np.float64)
 
@@ -395,24 +383,19 @@ def _pq_codes_numpy(
             x = np.array(
                 [np.asarray(v, dtype=np.float64) for v in pdf["__v"]]
             )
-            out = _pq_argmin_codes(x, cmat, keys, m)
-            cols = {"vec_id": pdf["__id"].values, "codes": list(out)}
-            if carry_coarse:
-                cols["coarse"] = pdf["__coarse"].values
-            yield pd.DataFrame(cols)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["__id"].values,
+                    "codes": list(_pq_argmin_codes(x, cmat, keys, m)),
+                    "coarse": pdf["__coarse"].values,
+                }
+            )
 
-    # carry_coarse ships the precomputed coarse id through the batch so a
-    # residual index build/maintain emits (id, coarse, codes) in ONE
-    # python pass — the old shape joined a separate codes frame back on
-    # id (guide §2.4).
     src = df.select(
         F.col(id_col).cast("long").alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
-        *([F.col("coarse").cast("long").alias("__coarse")] if carry_coarse else []),
+        F.col("coarse").cast("long").alias("__coarse"),
     )
-    schema = (
-        "vec_id long, codes array<bigint>, coarse long"
-        if carry_coarse
-        else "vec_id long, codes array<bigint>"
+    return src.mapInPandas(
+        _codes, schema="vec_id long, codes array<bigint>, coarse long"
     )
-    return src.mapInPandas(_codes, schema=schema)

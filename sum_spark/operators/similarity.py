@@ -636,96 +636,42 @@ def knn_ivfpq(
     left-to-right in Spark, DuckDB and the driver-side LUT kernel
     _probe_luts, so the doubles match bit-for-bit).
 
+    The search IS the stored-index search over an index built in the
+    plan: the (id, coarse, codes) rows come from _pq_rows, the encoder
+    write_pq_index stores, and score through _adc_topk, the scorer
+    knn_ivfpq_from_index runs — so in-flight and from-index results are
+    equal by construction. A book of more than _LARGE_K (64) entries
+    therefore encodes as write_pq_index does: GEMM argmins, which need
+    an integral id column.
+
     ``probes`` must be small (their vectors are collected to build the
-    LUT literals — the same bounded-small-side contract as
+    broadcast LUT table — the same bounded-small-side contract as
     knn_bruteforce's broadcast and knn_ivf_from_index's bucket collect).
-    Output: (probe_id, id, adc, rank) — adc is the approximate SQUARED
-    distance (ascending = nearer), rank within the probe's coarse list.
+    Output: (probe_id long, id, adc, rank) — adc is the approximate
+    SQUARED distance (ascending = nearer), rank within the probe's
+    coarse list.
 
     ``residual=True`` switches to the textbook IVF-PQ encoding: vectors
     are PQ-coded as RESIDUALS from their coarse centroid (v - c_list),
-    against a residual codebook trained by the same one-step recipe, and
-    the probe tabulates distances from ITS residual (q - c_list). Within
-    a list, residual spread is much smaller than raw spread, so the same
-    m x n_codes budget approximates true distances far more tightly —
-    pinned by the accuracy test. One extra map-side subtraction on each
-    side; the index layout and the scoring loop are unchanged.
+    against a residual codebook trained by the same one-step recipe on
+    the _residualize frame, and the probe tabulates distances from ITS
+    residual (q - c_list). Within a list, residual spread is much smaller
+    than raw spread, so the same m x n_codes budget approximates true
+    distances far more tightly — pinned by the accuracy test.
     """
-    from sum_spark.operators.clustering import (
-        _centroids_from_sums,
-        assign_clusters,
-        centroid_sums,
-        hash_init_assign,
-    )
-    from sum_spark.operators.embeddings import _pq_check_dims, product_quantize
+    from sum_spark.operators.embeddings import _pq_check_dims
 
     if centroids is None:
-        init = hash_init_assign(records, n_codes, id_col)
-        centroids = _centroids_from_sums(
-            centroid_sums(init, "cluster", vec_col, 6).collect(), 6
-        )
+        centroids = train_pq_codebook(records, n_codes, id_col, vec_col)
     _pq_check_dims(sorted(centroids.items()), m)
-
-    # Corpus index: (id, coarse cluster, m codes) — what a 100 TB
-    # deployment stores (write with partitionBy(coarse) for pruning).
+    res_book = None
     if residual:
-        # Residual = v - centroid[coarse] (_residualize, shared with the
-        # stored index); the residual codebook trains on these with the
-        # same one-step recipe (hash-init on the SAME ids, one
-        # fixed-point aggregate).
-        coarse = _residualize(records, centroids, id_col, vec_col, backend="catalyst")
-        codes, pq_book = product_quantize(
-            coarse, m=m, k=n_codes, id_col=id_col, vec_col="__res"
-        )
-    else:
-        coarse = assign_clusters(
-            records, centroids, id_col, vec_col, cluster_col="coarse",
-            backend="catalyst",
-        )
-        pq_book = centroids
-        codes, _ = product_quantize(
-            records, m=m, k=n_codes, id_col=id_col, vec_col=vec_col,
-            centroids=centroids,
-        )
-    index = coarse.select(F.col(id_col), "coarse").join(
-        codes.select(F.col("vec_id").alias(id_col), "codes"), id_col
-    )
-
-    # Probe side: coarse list and LUT doubles from the shared kernel
-    # (the engines' left-to-right fold, bit for bit).
-    probe_rows = probes.select(
-        F.col(id_col).alias("__pid"), F.col(vec_col).cast("array<double>").alias("__pv")
-    ).collect()
-    pairs, luts_by_key = _probe_luts(
-        centroids, pq_book if residual else None, probe_rows, m, 1
-    )
-    legs = []
-    for i, (pid, best) in enumerate(pairs):
-        adc = None
-        for j, lut in enumerate(luts_by_key[i if residual else pid]):
-            lut_col = F.map_from_arrays(
-                F.array(*[F.lit(code).cast("long") for code in lut]),
-                F.array(*[F.lit(v) for v in lut.values()]),
-            )
-            term = F.element_at(lut_col, F.col("codes")[j])
-            adc = term if adc is None else adc + term
-        if round_to is not None:
-            adc = F.round(adc, round_to)
-        legs.append(
-            index.where((F.col("coarse") == best) & (F.col(id_col) != pid)).select(
-                F.lit(pid).alias("probe_id"),
-                F.col(id_col),
-                adc.alias("adc"),
-            )
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionAll(leg)
-    w = W.partitionBy("probe_id").orderBy(F.col("adc").asc(), F.col(id_col))
-    return (
-        out.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .transform(lambda d: d.orderBy("probe_id", "rank") if ordered else d)
+        res = _residualize(records, centroids, id_col, vec_col)
+        res_book = train_pq_codebook(res, n_codes, id_col, "__res")
+    idx = _pq_rows(records, centroids, res_book, m, id_col, vec_col)
+    return _adc_topk(
+        idx, centroids, res_book, _probe_rows(probes, id_col, vec_col),
+        m, 1, k, id_col, round_to, ordered,
     )
 
 
@@ -734,29 +680,28 @@ def _residualize(
     centroids: dict[int, list[float]],
     id_col: str,
     vec_col: str,
-    backend: str = "catalyst",
 ) -> DataFrame:
     """(id, coarse, __res) — each vector's coarse assignment plus its
-    residual v - centroid[coarse] (the knn_ivfpq residual=True encoding,
-    factored out so the stored index, the maintenance encoder, and the
-    in-flight search share ONE residual definition and stay
-    bit-identical).
+    residual v - centroid[coarse] (the residual IVF-PQ encoding, ONE
+    definition for the stored index, the maintenance encoder and the
+    in-flight search, so they stay bit-identical).
 
-    backend='catalyst': map-side zip_with against a plan-literal
-    centroid map — oracle-reproducible, plan size O(k x d).
-    backend='join': the large-k form — numpy coarse assignment plus a
-    broadcast join to a k-row codebook frame, zip_with the joined
-    centroid; the residual DOUBLES are identical (x - c is the same
-    subtraction either way), only the assignment's argmin float order
-    differs (engine-deterministic, see product_quantize)."""
+    The book size picks the form: up to _LARGE_K entries, a map-side
+    zip_with against a plan-literal centroid map (oracle-reproducible,
+    plan size O(k x d)); past it, numpy coarse assignment plus a
+    broadcast join to a k-row codebook frame. The residual DOUBLES are
+    identical (x - c is the same subtraction either way); only the
+    assignment's argmin float order differs (engine-deterministic, see
+    _pq_rows)."""
     from sum_spark.operators.clustering import assign_clusters
 
     items = sorted(centroids.items())
+    large = len(centroids) > _LARGE_K
     coarse = assign_clusters(
         records, centroids, id_col, vec_col, cluster_col="coarse",
-        backend="numpy" if backend == "join" else "catalyst",
+        backend="numpy" if large else "catalyst",
     )
-    if backend == "join":
+    if large:
         cb = records.sparkSession.createDataFrame(
             [(int(cid), [float(x) for x in c]) for cid, c in items],
             "coarse long, __cent array<double>",
@@ -858,8 +803,11 @@ def write_pq_index(
     returned and also persisted at ``<path>/_codebook`` so a later
     session can search without retraining; vectors themselves are NOT
     stored (that's the point — join back on id when payloads are
-    needed). Same one-step fixed-point codebook as knn_ivfpq, so
-    in-flight and from-index searches return identical neighbors.
+    needed). Same one-step fixed-point codebook as knn_ivfpq, and
+    knn_ivfpq builds its in-plan index with this encoder (_pq_rows) and
+    scores it with knn_ivfpq_from_index's scorer (_adc_topk), so
+    in-flight and from-index searches over the same books are equal by
+    construction.
 
     ``residual=True`` stores the TEXTBOOK IVF-PQ encoding (knn_ivfpq's
     residual mode, Jégou et al. 2011): codes quantize v - c_list
@@ -883,9 +831,11 @@ def write_pq_index(
     sets the cell count so the per-query scanned fraction stays bounded
     as the corpus grows. For a RAW index the coarse book IS the PQ book,
     so n_cells sets both; a residual index keeps its n_codes-entry
-    residual book and only the coarse book widens. Past ~64 cells every
-    encode ships the book as DATA (numpy/GEMM backends, broadcast-join
-    residualize) — plan-literal codebooks at that size cost minutes of
+    residual book and only the coarse book widens. Past _LARGE_K (64)
+    entries a book ships as DATA (_pq_rows' GEMM encode, broadcast-join
+    residualize), decided by the ACTUAL book's size, never the requested
+    cells, so maintenance re-encodes take the build's path — plan-literal
+    codebooks at that size cost minutes of
     py4j and blow codegen; the large-k encode is engine-deterministic
     (identical reruns — what deletion-as-negation needs), not
     oracle-reproducible. Resize = retrain_pq_index(n_cells='auto')."""
@@ -894,66 +844,54 @@ def write_pq_index(
     cells = int(n_cells) if n_cells is not None else int(n_codes)
     if centroids is None:
         centroids = train_pq_codebook(records, cells, id_col, vec_col)
-    # the backend flag MUST come from the ACTUAL book (not the requested
-    # cells): maintenance re-encodes decide by the STORED book's size
-    # (_encode_with_stored_book), and the two backends differ in float
-    # summation order — a build/maintenance backend mismatch breaks the
-    # bit-exact re-encode deletion-as-negation requires. An externally
-    # passed large book with small n_codes (or a trained book smaller
-    # than requested via empty hash buckets) would otherwise flip it.
-    large = len(centroids) > _LARGE_K
+    res_book = _write_pq_rows(
+        records, centroids, residual, n_codes, res_iters, m, id_col, vec_col, path
+    )
     spark = records.sparkSession
-    if residual:
-        from sum_spark.operators.embeddings import _pq_codes_numpy, pq_codes_sql
-
-        # persisted: the residual frame feeds the seed collect, every
-        # Lloyd iteration, and the encode+write — a full-corpus
-        # assign_clusters each without the cache
-        res = _residualize(
-            records, centroids, id_col, vec_col,
-            backend="join" if large else "catalyst",
-        ).persist()
-        try:
-            trained = _train_residual_book(res, n_codes, id_col, res_iters)
-            # iters=0: the one-step book product_quantize would train —
-            # the same hash-init fixed-point aggregate, computed here so
-            # the encode below is one projection with no codes-join
-            # (guide §2.4; _pq_rows is the maintenance twin).
-            res_book = (
-                trained
-                if trained is not None
-                else train_pq_codebook(res, int(n_codes), id_col, "__res")
-            )
-            if len(res_book) > _LARGE_K:
-                rows = _pq_codes_numpy(
-                    res, m, sorted(res_book.items()), id_col, "__res",
-                    carry_coarse=True,
-                ).select(F.col("vec_id").alias(id_col), "coarse", "codes")
-            else:
-                rows = res.selectExpr(
-                    qid(id_col),
-                    "coarse",
-                    f"{pq_codes_sql(sorted(res_book.items()), m, '__res')} AS codes",
-                )
-            rows.withColumn("w", F.lit(1)).write.partitionBy("coarse").parquet(
-                path, mode="overwrite"
-            )
-        finally:
-            res.unpersist()
-        write_pq_codebook(spark, centroids, path)
+    write_pq_codebook(spark, centroids, path)
+    if res_book is not None:
         write_pq_codebook(spark, res_book, path, name="_codebook_res")
         _write_res_iters(path, res_iters)
-        _attest(path)
-        return centroids
-    (
-        _pq_rows(records, centroids, None, m, id_col, vec_col)
-        .withColumn("w", F.lit(1))
-        .write.partitionBy("coarse")
-        .parquet(path, mode="overwrite")
-    )
-    write_pq_codebook(spark, centroids, path)
     _attest(path)
     return centroids
+
+
+def _write_pq_rows(
+    records: DataFrame,
+    book: dict,
+    residual: bool,
+    n_codes: int,
+    res_iters: int,
+    m: int,
+    id_col: str,
+    vec_col: str,
+    target: str,
+) -> dict | None:
+    """Encode ``records`` (_pq_rows) and write the (id, codes, w=+1)
+    rows partitioned by coarse under ``target`` — the build of
+    write_pq_index and retrain_pq_index. A residual index first
+    residualizes and persists the frame, which feeds the seed collect,
+    every Lloyd iteration and the encode, then trains the residual book
+    on it (_train_residual_book; the one-step book for ``res_iters=0``).
+    Returns that book, or None for a raw index."""
+    res = res_book = None
+    if residual:
+        res = _residualize(records, book, id_col, vec_col).persist()
+    try:
+        if res is not None:
+            res_book = _train_residual_book(res, n_codes, id_col, res_iters)
+            if res_book is None:
+                res_book = train_pq_codebook(res, int(n_codes), id_col, "__res")
+        (
+            _pq_rows(records, book, res_book, m, id_col, vec_col, res=res)
+            .withColumn("w", F.lit(1))
+            .write.partitionBy("coarse")
+            .parquet(target, mode="overwrite")
+        )
+    finally:
+        if res is not None:
+            res.unpersist()
+    return res_book
 
 
 def train_pq_codebook(
@@ -1183,13 +1121,14 @@ def knn_ivfpq_from_index(
     """Search a write_pq_index table: the codebook reloads from
     ``<path>/_codebook`` (driver-sized), each probe's coarse list becomes
     a LITERAL filter on the partition column (PartitionFilters — only the
-    probed lists' files are opened), and candidates score by the same
-    m-lookup ADC as knn_ivfpq. Vectors are never read — the scan touches
+    probed lists' files are opened), and candidates score through
+    _adc_topk, the one IVF-PQ scorer (knn_ivfpq runs it over an index
+    built in the plan). Vectors are never read — the scan touches
     only (id, codes). ``n_probes > 1`` is the k-means form of
     multi-probe (knn_ivf_kmeans): the probe searches its ``n_probes``
     NEAREST coarse lists — still a literal partition filter, so the scan
     opens exactly those lists' files and recall buys candidate volume,
-    never a full scan. Output: (probe_id, id, adc, rank).
+    never a full scan. Output: (probe_id long, id, adc, rank).
 
     The driver-computed lookup tables ship as ONE broadcast-joined
     table of probes x n_probes rows rather than per-probe plan
@@ -1208,32 +1147,59 @@ def knn_ivfpq_from_index(
     The lists and LUT doubles come from _probe_luts, one kernel whose
     cells equal the oracle's left-to-right fold at every book size, so
     no caller picks a tabulation form. ``serve_ctx`` (pq_serve_context)
-    skips the per-call
-    codebook collects and index re-listing for repeated serves of an
-    unchanged index. ``probe_rows`` (rows of (__pid, __pv) — the exact
+    skips the per-call codebook collects and index re-listing for
+    repeated serves of an unchanged index. ``probe_rows`` (rows of (__pid, __pv) — the exact
     projection collected here) lets a caller serving SEVERAL indexes for
     one probe set pay the probe collect once instead of per index
     (guide §1.2: q_knn_search's five stored legs share one collect)."""
     if serve_ctx is not None and serve_ctx.get("path") == path:
         book, res_book = serve_ctx["book"], serve_ctx["res_book"]
-    else:
-        book, res_book = _load_books(spark, path)
-    if probe_rows is None:
-        probe_rows = probes.select(
-            F.col(id_col).alias("__pid"),
-            F.col(vec_col).cast("array<double>").alias("__pv"),
-        ).collect()
-    pairs, luts_by_key = _probe_luts(book, res_book, probe_rows, m, n_probes)
-
-    if serve_ctx is not None and serve_ctx.get("path") == path:
         idx = serve_ctx["idx"]
     else:
+        book, res_book = _load_books(spark, path)
         idx = pq_index_rows(spark, path, id_col)
+    if probe_rows is None:
+        probe_rows = _probe_rows(probes, id_col, vec_col)
+    return _adc_topk(
+        idx, book, res_book, probe_rows, m, n_probes, k, id_col, round_to, ordered
+    )
+
+
+def _probe_rows(probes: DataFrame, id_col: str, vec_col: str) -> list:
+    """The (__pid, __pv) probe rows every IVF-PQ search plans from."""
+    return probes.select(
+        F.col(id_col).alias("__pid"),
+        F.col(vec_col).cast("array<double>").alias("__pv"),
+    ).collect()
+
+
+def _adc_topk(
+    idx: DataFrame,
+    book: dict,
+    res_book: dict | None,
+    probe_rows: list,
+    m: int,
+    n_probes: int,
+    k: int,
+    id_col: str,
+    round_to: int | None,
+    ordered: bool,
+) -> DataFrame:
+    """The one IVF-PQ scorer, over (id, coarse, codes) rows ``idx`` —
+    a stored index's live view (knn_ivfpq_from_index) or one built in
+    the plan (knn_ivfpq). _probe_luts plans the probed lists and LUTs;
+    they ship as ONE table of (probe_id long, coarse long, __luts), and
+    the probed lists filter ``idx`` as a literal ``coarse IN (...)``
+    (PartitionFilters on a stored index). The table is broadcast-joined
+    on coarse, a probe never matches itself, and the ADC is the m
+    lookups summed left to right, optionally rounded; the top ``k`` per
+    probe rank by (adc asc, id)."""
+    pairs, luts_by_key = _probe_luts(book, res_book, probe_rows, m, n_probes)
     lut_rows = []
     for i, (pid, cid) in enumerate(pairs):
         luts = luts_by_key[pid] if res_book is None else luts_by_key[i]
         lut_rows.append((pid, cid, luts))
-    lut_df = spark.createDataFrame(
+    lut_df = idx.sparkSession.createDataFrame(
         lut_rows, "probe_id long, coarse long, __luts array<map<bigint,double>>"
     )
     probed = sorted({r[1] for r in lut_rows})
@@ -1326,10 +1292,7 @@ def _rerank_driver(
     )
     book, res_book, idx = ctx["book"], ctx["res_book"], ctx["idx"]
     if probe_rows is None:
-        probe_rows = probes.select(
-            F.col(id_col).alias("__pid"),
-            F.col(vec_col).cast("array<double>").alias("__pv"),
-        ).collect()
+        probe_rows = _probe_rows(probes, id_col, vec_col)
     pairs, luts_by_key = _probe_luts(book, res_book, probe_rows, m, n_probes)
     probed = sorted({cid for _, cid in pairs})
     # Per-context LRU over coarse lists' code rows (VERDICT r9 #3): a
@@ -1560,13 +1523,12 @@ def _pq_encode_raw_numpy(
     records: DataFrame, m: int, items: list, id_col: str, vec_col: str
 ) -> DataFrame:
     """(id, coarse, codes) for a RAW large-k index in ONE mapInPandas
-    pass: the coarse argmin (the book IS the coarse quantizer) and the m
-    subspace code argmins share each Arrow batch. The previous shape ran
-    TWO python passes (assign_clusters + _pq_codes_numpy) and a shuffle
-    join on id to recombine them (guide §2.4/§4). Arithmetic is
-    bit-identical to both: coarse uses the same _batched_sq_dists GEMM +
-    first-minimum argmin over ascending keys; codes use the same
-    embeddings._pq_argmin_codes as _pq_codes_numpy."""
+    pass, _pq_rows' encoder for a book past _LARGE_K: the coarse argmin
+    (the book IS the coarse quantizer) and the m subspace code argmins
+    share each Arrow batch. Coarse uses the _batched_sq_dists GEMM of
+    assign_clusters(backend='numpy') with its first-minimum argmin over
+    ascending keys; codes use embeddings._pq_argmin_codes, the GEMM
+    _pq_codes_numpy runs for a residual index."""
     import numpy as np
     import pandas as pd
 
@@ -1612,17 +1574,24 @@ def _pq_rows(
     m: int,
     id_col: str,
     vec_col: str,
+    res: DataFrame | None = None,
 ) -> DataFrame:
-    """The (id, coarse, codes) frame an index stores, computed WITHOUT
-    the historical codes-join: coarse assignment and PQ codes are both
-    map-side functions of the same row, so they belong in one projection
-    (small books: catalyst exprs; large books: one GEMM pass). Shared by
-    build and maintenance so stored rows stay bit-identical across both
-    (the deletion-as-negation contract)."""
+    """The (id, coarse, codes) frame an index stores — the ONLY code that
+    turns (records, book, res_book) into index rows, shared by build,
+    maintenance and the in-flight search so stored rows stay
+    bit-identical across all of them (the deletion-as-negation
+    contract). Coarse assignment and PQ codes are both map-side
+    functions of the same row, so they come out of one projection with
+    no codes-join. Each book's size picks its form: up to _LARGE_K
+    entries the catalyst literal fold (oracle-reproducible); past it one
+    Arrow-batched GEMM pass (engine-deterministic — identical reruns —
+    and integral ids only). The choice is part of the stored format:
+    maintenance re-encodes decide by the stored books' sizes. ``res`` is
+    the _residualize frame of ``records`` under ``book`` when the caller
+    already holds it (persisted for residual-book training)."""
     from sum_spark.operators.clustering import assign_clusters
     from sum_spark.operators.embeddings import _pq_codes_numpy, pq_codes_sql
 
-    large = len(book) > _LARGE_K
     # The numpy encode paths emit the id as BIGINT; cast back to the
     # input id type so an index built before the one-pass encode (with a
     # non-bigint id) keeps ONE parquet id type across all batch dirs —
@@ -1631,22 +1600,18 @@ def _pq_rows(
     # ids), so the downcast is exact.
     id_type = records.schema[id_col].dataType
     if res_book is not None:
-        res = _residualize(
-            records, book, id_col, vec_col,
-            backend="join" if large else "catalyst",
-        )
+        if res is None:
+            res = _residualize(records, book, id_col, vec_col)
+        res_items = sorted(res_book.items())
         if len(res_book) > _LARGE_K:
-            return _pq_codes_numpy(
-                res, m, sorted(res_book.items()), id_col, "__res",
-                carry_coarse=True,
-            ).select(F.col("vec_id").cast(id_type).alias(id_col), "coarse", "codes")
+            return _pq_codes_numpy(res, m, res_items, id_col, "__res").select(
+                F.col("vec_id").cast(id_type).alias(id_col), "coarse", "codes"
+            )
         return res.selectExpr(
-            qid(id_col),
-            "coarse",
-            f"{pq_codes_sql(sorted(res_book.items()), m, '__res')} AS codes",
+            qid(id_col), "coarse", f"{pq_codes_sql(res_items, m, '__res')} AS codes"
         )
     items = sorted(book.items())
-    if large:
+    if len(book) > _LARGE_K:
         enc = _pq_encode_raw_numpy(records, m, items, id_col, vec_col)
         return enc.withColumn(id_col, F.col(id_col).cast(id_type))
     coarse = assign_clusters(
@@ -1936,7 +1901,6 @@ def retrain_pq_index(
     import os
 
     from sum_spark import swap
-    from sum_spark.operators.embeddings import _pq_codes_numpy, pq_codes_sql
     from sum_spark.operators.search import _batch_fold_plan
 
     staged = swap.staging(path)
@@ -1972,53 +1936,16 @@ def retrain_pq_index(
         else int(n_cells) if n_cells is not None else int(n_codes)
     )
     book = train_pq_codebook(survivors, cells, id_col, vec_col)
-    # from the ACTUAL book, never the requested cells — see
-    # write_pq_index (a trained book can come out smaller than
-    # requested via empty hash buckets, and maintenance decides by
-    # the stored book's size)
-    large = len(book) > _LARGE_K
-    res_book = None
-    if old_res is not None:
-        # a residual index retrains BOTH books with the recipe the
-        # index was BUILT with: res_iters=None (default) reads the
-        # recipe recorded next to the stored book, so a default
-        # retrain can never silently swap a Lloyd-trained residual
-        # book for the degeneracy-prone one-step fallback
-        ri = _read_res_iters(path) if res_iters is None else int(res_iters)
-        res = _residualize(
-            survivors, book, id_col, vec_col,
-            backend="join" if large else "catalyst",
-        ).persist()
-        trained = _train_residual_book(res, n_codes, id_col, ri)
-        res_book = (
-            trained
-            if trained is not None
-            else train_pq_codebook(res, int(n_codes), id_col, "__res")
-        )
-        # one projection, no codes-join — the write_pq_index /
-        # _pq_rows encode shape (guide §2.4)
-        if len(res_book) > _LARGE_K:
-            rows = _pq_codes_numpy(
-                res, m, sorted(res_book.items()), id_col, "__res",
-                carry_coarse=True,
-            ).select(F.col("vec_id").alias(id_col), "coarse", "codes")
-        else:
-            rows = res.selectExpr(
-                qid(id_col),
-                "coarse",
-                f"{pq_codes_sql(sorted(res_book.items()), m, '__res')} AS codes",
-            )
-    else:
-        rows = _pq_rows(survivors, book, None, m, id_col, vec_col)
-    try:
-        (
-            rows.withColumn("w", F.lit(1))
-            .write.partitionBy("coarse")
-            .parquet(staged + sub, mode="overwrite")
-        )
-    finally:
-        if old_res is not None:
-            res.unpersist()
+    # a residual index retrains BOTH books with the recipe the index was
+    # BUILT with: res_iters=None (default) reads the recipe recorded next
+    # to the stored book, so a default retrain can never silently swap a
+    # Lloyd-trained residual book for the degeneracy-prone one-step
+    # fallback
+    ri = _read_res_iters(path) if res_iters is None else int(res_iters)
+    res_book = _write_pq_rows(
+        survivors, book, old_res is not None, n_codes, ri, m, id_col, vec_col,
+        staged + sub,
+    )
     # stage the new book(s) NEXT TO the rows: the swap replaces all
     # or none (the _codebook prefix in the drop set also covers
     # _codebook_res; the recipe file rides inside the staged book dir)

@@ -143,6 +143,7 @@ def streaming_ann_scores(
     candidate list per probe is already coarse-list-bounded.
     """
     from sum_spark.operators.clustering import assign_clusters
+    from sum_spark.operators.similarity import _cent_map_expr
 
     items = sorted(codebook.items())
     d = len(items[0][1])
@@ -161,10 +162,7 @@ def streaming_ann_scores(
     )
 
     # Full-centroid lookup table as one literal map (k x d doubles).
-    book_map = F.map_from_arrays(
-        F.array(*[F.lit(int(cid)).cast("long") for cid, _ in items]),
-        F.array(*[F.array(*[F.lit(float(x)) for x in c]) for _, c in items]),
-    )
+    book_map = _cent_map_expr(items)
     idx = index.select(
         F.col(index_id_col).alias("id"), "coarse", "codes"
     )

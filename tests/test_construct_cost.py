@@ -216,9 +216,16 @@ def test_darray_elements_equal_double_literals(spark):
 
 @pytest.mark.parametrize("backend", ["catalyst", "numpy"])
 def test_empty_codebook_raises_value_error(spark, backend):
+    """An empty book refuses in both PQ encoders: product_quantize's
+    catalyst fold and the large-k GEMM encoder _pq_codes_numpy."""
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="at least one centroid"):
-        embeddings.product_quantize(empty, m=2, k=4, backend=backend)
+        if backend == "catalyst":
+            embeddings.product_quantize(empty, m=2, k=4)
+        else:
+            embeddings._pq_codes_numpy(
+                empty.withColumn("coarse", F.lit(0)), 2, [], "vec_id", "embedding"
+            )
 
 
 def test_knn_ivfpq_empty_codebook_raises_value_error(spark):

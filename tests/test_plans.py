@@ -100,6 +100,32 @@ def test_find_similar_topk_evaluates_kernel_once(spark, sf_smoke):
     assert ">=" not in join
 
 
+@pytest.mark.parametrize("residual, zip_withs", [(False, 5), (True, 6)])
+def test_knn_ivfpq_is_one_scan_and_one_lut_join(spark, sf_smoke, residual, zip_withs):
+    """In-flight knn_ivfpq scores its in-plan index through the
+    stored-index scorer: no per-probe Union legs and no id join, one
+    scan of the corpus, and the LUT table broadcast-joined on coarse.
+    The zip_with count pins the encode (coarse fold, codes folds, and
+    for residual the subtraction) as one projection of the scan."""
+    from sum_spark.operators.similarity import knn_ivfpq
+    from sum_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_smoke, "embeddings")
+    df = knn_ivfpq(
+        emb, emb.where("vec_id <= 3"), k=5, m=2, n_codes=8, id_col="vec_id",
+        vec_col="embedding", round_to=4, residual=residual,
+    )
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "Union" not in final
+    assert final.count("FileScan parquet") == 1
+    joins = [ln for ln in final.splitlines() if "Join" in ln]
+    assert len(joins) == 1, joins
+    assert "BroadcastHashJoin [coarse" in joins[0]
+    assert final.count("zip_with(") == zip_withs
+
+
 def test_embedding_cosine_broadcast_sits_behind_size_guard(
     spark, sf_smoke, monkeypatch
 ):

@@ -737,3 +737,38 @@ def test_knn_ivf_kmeans_probe_side_matches_column_reference(spark, n_probes):
 
     rows = packed(want)
     assert packed(got) == rows and rows
+
+
+def test_knn_ivfpq_large_book_equals_from_index(spark, tmp_path):
+    """In-flight knn_ivfpq with a book past _LARGE_K encodes through the
+    same GEMM path as write_pq_index, so its rows (adc by its bits)
+    equal knn_ivfpq_from_index over an index written with that book."""
+    import numpy as np
+
+    from sum_spark.operators.similarity import (
+        _LARGE_K,
+        knn_ivfpq,
+        knn_ivfpq_from_index,
+        write_pq_index,
+    )
+
+    rng = np.random.default_rng(100)
+    d = 8
+    recs = spark.createDataFrame(
+        [(i, rng.standard_normal(d).tolist()) for i in range(400)],
+        "id long, data array<double>",
+    )
+    book = {j: rng.standard_normal(d).tolist() for j in range(100)}
+    assert len(book) > _LARGE_K
+    probes = recs.where("id < 8")
+    path = str(tmp_path / "pq_large")
+    write_pq_index(recs, path, m=2, centroids=book)
+
+    def rows(df):
+        return sorted(
+            (r["probe_id"], r["id"], r["adc"].hex(), r["rank"]) for r in df.collect()
+        )
+
+    inflight = rows(knn_ivfpq(recs, probes, k=5, m=2, centroids=book))
+    assert inflight
+    assert inflight == rows(knn_ivfpq_from_index(spark, path, probes, k=5, m=2))

@@ -1285,8 +1285,8 @@ def test_ivf_auto_bits_sidecar(spark, tmp_path):
 
 
 def test_numpy_encode_backends_agree_with_catalyst(spark):
-    """The large-k encode backends (product_quantize backend='numpy',
-    assign_clusters backend='numpy', _residualize backend='join') must
+    """The large-k encoders (assign_clusters backend='numpy', the
+    _pq_codes_numpy GEMM, _residualize's join form past _LARGE_K) must
     produce the SAME assignments/codes/residuals as the catalyst literal
     paths on generic data — float summation order differs only in the
     last bits, which cannot flip an argmin off ties, and ties are
@@ -1296,7 +1296,7 @@ def test_numpy_encode_backends_agree_with_catalyst(spark):
     import numpy as np
 
     from sum_spark.operators.clustering import assign_clusters, kmeans_fit
-    from sum_spark.operators.embeddings import product_quantize
+    from sum_spark.operators.embeddings import _pq_codes_numpy, product_quantize
     import sum_spark.operators.similarity as S
 
     rng = np.random.default_rng(47)
@@ -1319,24 +1319,39 @@ def test_numpy_encode_backends_agree_with_catalyst(spark):
     c_cat, _ = product_quantize(
         df, m=2, k=5, id_col="id", vec_col="data", centroids=cents
     )
-    c_np, _ = product_quantize(
-        df, m=2, k=5, id_col="id", vec_col="data", centroids=cents,
-        backend="numpy",
+    c_np = _pq_codes_numpy(
+        df.withColumn("coarse", F.col("id") % 3), 2, sorted(cents.items()),
+        "id", "data",
     )
     cc = {r["vec_id"]: list(r["codes"]) for r in c_cat.collect()}
     cn = {r["vec_id"]: list(r["codes"]) for r in c_np.collect()}
     assert cc == cn
+    # the coarse id rides through the GEMM pass unchanged
+    assert {r["vec_id"]: r["coarse"] for r in c_np.collect()} == {
+        i: i % 3 for i in range(300)
+    }
 
-    r_cat = {
-        r["id"]: (r["coarse"], tuple(r["__res"]))
-        for r in S._residualize(df, cents, "id", "data").collect()
-    }
-    r_join = {
-        r["id"]: (r["coarse"], tuple(r["__res"]))
-        for r in S._residualize(df, cents, "id", "data", backend="join").collect()
-    }
-    # same assignment; residual doubles BIT-identical (x - c either way)
-    assert r_cat == r_join
+    # _residualize: the catalyst form up to _LARGE_K entries, the join
+    # form past it. Both must equal the catalyst assignment plus the
+    # IEEE subtraction x - c, bit for bit.
+    vecs = dict(rows)
+    big = {j: rng.standard_normal(8).tolist() for j in range(S._LARGE_K + 6)}
+    for book in (cents, big):
+        want_cluster = {
+            r["id"]: r["cluster"]
+            for r in assign_clusters(
+                df, book, "id", "data", backend="catalyst"
+            ).collect()
+        }
+        want = {
+            i: (c, tuple(x - y for x, y in zip(vecs[i], book[c])))
+            for i, c in want_cluster.items()
+        }
+        got = {
+            r["id"]: (r["coarse"], tuple(r["__res"]))
+            for r in S._residualize(df, book, "id", "data").collect()
+        }
+        assert got == want, len(book)
 
 
 def test_backend_follows_actual_book_size_not_params(spark, tmp_path):
@@ -1432,18 +1447,16 @@ def test_numpy_backend_refuses_non_integral_ids(spark):
     import numpy as np
     import pytest
 
-    from sum_spark.operators.embeddings import product_quantize
+    from sum_spark.operators.embeddings import _pq_codes_numpy, product_quantize
 
     rng = np.random.default_rng(67)
     rows = [(f"doc-{i}", rng.standard_normal(8).tolist()) for i in range(50)]
     df = spark.createDataFrame(rows, "id string, data array<double>")
     book = {j: rng.standard_normal(8).tolist() for j in range(4)}
     with pytest.raises(TypeError, match="integral id"):
-        codes, _ = product_quantize(
-            df, m=2, k=4, id_col="id", vec_col="data",
-            centroids=book, backend="numpy",
-        )
-        codes.collect()
+        _pq_codes_numpy(
+            df.withColumn("coarse", F.lit(0)), 2, sorted(book.items()), "id", "data"
+        ).collect()
     # the catalyst path accepts the same frame
     codes, _ = product_quantize(
         df, m=2, k=4, id_col="id", vec_col="data", centroids=book
